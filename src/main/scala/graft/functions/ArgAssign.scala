@@ -58,6 +58,35 @@ abstract class ArgAssignBase extends Expression with CodegenFallback {
   protected final def fieldIndex(arr: Expression, name: String): Int =
     arr.dataType.asInstanceOf[ArrayType]
       .elementType.asInstanceOf[StructType].fieldIndex(name)
+
+  /** Model struct fields `eval` reads: (name, required type as the
+    * failure names it, test). */
+  protected def modelFields: Seq[(String, String, DataType => Boolean)] =
+    Seq(("cid", "bigint", _ == LongType),
+      ("cv", "array<bigint>", {
+        case ArrayType(LongType, _) => true
+        case _ => false
+      }),
+      ("cnrm", "bigint", _ == LongType))
+
+  /** Success when every model field is present with its required type,
+    * else a failure naming the first missing or mistyped one — so a bad
+    * model fails at analysis, not with a ClassCastException mid-task. */
+  protected final def checkModel(model: StructType)
+      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
+    import org.apache.spark.sql.catalyst.analysis.TypeCheckResult._
+    modelFields.iterator.map { case (name, want, ok) =>
+      model.fields.find(_.name == name) match {
+        case None => TypeCheckFailure(
+          s"$prettyName: model field '$name' ($want) is missing from " +
+            model.simpleString)
+        case Some(f) if !ok(f.dataType) => TypeCheckFailure(
+          s"$prettyName: model field '$name' must be $want, got " +
+            f.dataType.simpleString)
+        case _ => TypeCheckSuccess
+      }
+    }.find(_.isFailure).getOrElse(TypeCheckSuccess)
+  }
 }
 
 /** `argmax_cos_cid(qv, nrm, cents)` ≡
@@ -78,8 +107,8 @@ case class ArgmaxCosineCid(qv: Expression, nrm: Expression, cents: Expression)
       : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
     import org.apache.spark.sql.catalyst.analysis.TypeCheckResult._
     (qv.dataType, nrm.dataType, cents.dataType) match {
-      case (ArrayType(LongType, _), LongType, ArrayType(_: StructType, _)) =>
-        TypeCheckSuccess
+      case (ArrayType(LongType, _), LongType, ArrayType(st: StructType, _)) =>
+        checkModel(st)
       case t => TypeCheckFailure(s"$prettyName got $t")
     }
   }
@@ -126,6 +155,11 @@ case class ArgminL2Cid(sv: Expression, snrm: Expression, m: Expression,
       c: IndexedSeq[Expression]): Expression = copy(c(0), c(1), c(2), c(3))
   override def prettyName: String = "argmin_l2_cid"
 
+  override protected def modelFields
+      : Seq[(String, String, DataType => Boolean)] =
+    super.modelFields :+
+      (("m", "int or bigint", (t: DataType) => t == IntegerType || t == LongType))
+
   private lazy val mI = fieldIndex(cbs, "m")
   private lazy val cidI = fieldIndex(cbs, "cid")
   private lazy val cvI = fieldIndex(cbs, "cv")
@@ -135,9 +169,9 @@ case class ArgminL2Cid(sv: Expression, snrm: Expression, m: Expression,
       : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
     import org.apache.spark.sql.catalyst.analysis.TypeCheckResult._
     (sv.dataType, snrm.dataType, cbs.dataType) match {
-      case (ArrayType(LongType, _), LongType, ArrayType(_: StructType, _))
+      case (ArrayType(LongType, _), LongType, ArrayType(st: StructType, _))
         if m.dataType == IntegerType || m.dataType == LongType =>
-        TypeCheckSuccess
+        checkModel(st)
       case t => TypeCheckFailure(s"$prettyName got ($t, ${m.dataType})")
     }
   }

@@ -88,29 +88,45 @@ object Materialize {
     materializeOnce(df)
   }
 
-  /** Release a tagged frame EARLY — iterative trainers drop iteration
-    * k−1's cache once iteration k is materialized (nothing reads k−1
-    * afterwards; on eviction the lineage recomputes), so a K-round loop
-    * holds one round's model in storage, not K. */
-  private[graft] def release(tag: String): Unit =
-    Option(matRegistry.remove(tag)).foreach(_.unpersist(blocking = true))
-
   /** Run independent Spark ACTIONS concurrently (guide §2.6 — the
     * scheduler happily runs several jobs at once; they are only
     * sequential because driver code calls them sequentially): one
     * job's task tail back-fills cores the other's stages free. Only
     * for actions with NO data or ordering dependency (separate output
-    * tables/dirs); exceptions propagate unwrapped so callers fail the
-    * same way they would sequentially. */
+    * tables/dirs). The FIRST failure, in completion order, cancels the
+    * siblings' running jobs (each action runs under its own job tag —
+    * a tag, not a job group, so a caller's group still covers the
+    * jobs), waits for the siblings to stop, and propagates unwrapped,
+    * so callers fail the same way they would sequentially. */
   private[graft] def inParallel(fs: (() => Unit)*): Unit = {
+    require(fs.nonEmpty, "inParallel needs at least one action to run")
+    val sc = org.apache.spark.SparkContext.getOrCreate()
+    val run = java.util.UUID.randomUUID()
+    val tags = fs.indices.map(i => s"graft-inparallel-$run-$i")
     val pool = java.util.concurrent.Executors.newFixedThreadPool(fs.size)
+    val done = new java.util.concurrent.ExecutorCompletionService[Unit](pool)
     try {
-      val futs = fs.map(f => pool.submit(new java.util.concurrent.Callable[Unit] {
-        override def call(): Unit = f()
-      }))
-      futs.foreach { fut =>
-        try fut.get()
-        catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
+      fs.zip(tags).foreach { case (f, tag) =>
+        done.submit(() => {
+          sc.addJobTag(tag)
+          try f() finally sc.removeJobTag(tag)
+        })
+      }
+      fs.indices.foreach { _ =>
+        try done.take().get()
+        catch {
+          case e: java.util.concurrent.ExecutionException =>
+            // again after the siblings stop: a job one submitted after
+            // the first cancel has no thread waiting on it any more
+            def cancelSiblings(): Unit = tags.foreach(
+              sc.cancelJobsWithTag(_, "a sibling inParallel action failed"))
+            cancelSiblings()
+            pool.shutdownNow()
+            pool.awaitTermination(Long.MaxValue,
+              java.util.concurrent.TimeUnit.NANOSECONDS)
+            cancelSiblings()
+            throw e.getCause
+        }
       }
     } finally pool.shutdown()
   }
@@ -832,7 +848,8 @@ object Materialize {
     * size through the `o_totalprice > ...` filter (filters don't shrink
     * size-only estimates), so the join of the filtered slice into
     * lineitem plans as a sort-merge join under a low broadcast
-    * threshold; with `ANALYZE .. FOR ALL COLUMNS` + `spark.sql.cbo
+    * threshold; with per-column `ANALYZE .. FOR COLUMNS` on the join
+    * and filter columns ([[ensureCboTables]]) + `spark.sql.cbo
     * .enabled`, FilterEstimation's min/max range math collapses the
     * estimate and the SAME query broadcasts the sliver instead (and
     * CostBasedJoinReorder may rewrite the deliberately-bad user join

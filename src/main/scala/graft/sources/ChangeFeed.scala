@@ -432,7 +432,7 @@ object ChangeFeed {
     // the logical side recurses (advisor r17): dotted #colmap entries
     // rename/drop STRUCT INNER fields on this face exactly as on the
     // main table face — the unpruned read then physicalizes per level,
-    // so nested-dropped data never resurfaces through the group reader
+    // so nested-dropped data never resurfaces on the change feed
     val logical = ManifestSink.logicalizeStruct(phys, colmap)
     (served, // physical (top-level drops applied; inner names physical)
       logical.add(ChangeTypeCol, "string", nullable = false)
@@ -476,14 +476,6 @@ private[sources] class SnapChangesTable(tname: String, dir: String)
   import scala.jdk.CollectionConverters._
 
   private val (physSchema, servedSchema) = ChangeFeed.changeSchema(dir)
-  private def fieldNames: Array[String] =
-    physSchema.fields.map(_.name) ++
-      Array(ChangeFeed.ChangeTypeCol, ChangeFeed.CommitVersionCol,
-        ChangeFeed.CommitTsCol)
-  private def fieldTypes: Array[String] =
-    physSchema.fields.map(f =>
-      graft.sources.ManifestSink.typeTokOf(f.dataType)) ++
-      Array("string", "long", "timestamp")
 
   override def name(): String = s"snap($tname).changes"
   override def schema(): StructType = servedSchema
@@ -506,65 +498,29 @@ private[sources] class SnapChangesTable(tname: String, dir: String)
       // COLUMN PRUNING (round 17): a CDC consumer typically reads a
       // key or two plus the change columns — decoding the full row
       // width for that is exactly the cost this face must not pay at
-      // 100 TB. The group reader already projects by requested name,
-      // so pruning is just narrowing what it is asked for; the change
-      // pseudo-columns cost zero bytes either way.
+      // 100 TB. [[ManifestReadFactory]] reads only the requested
+      // columns, so pruning is just narrowing what it is asked for; the
+      // change pseudo-columns cost zero bytes either way.
       private var pruned: Option[StructType] = None
       override def pruneColumns(requiredSchema: StructType): Unit =
         pruned = Some(requiredSchema)
       private def servedPruned: StructType =
         pruned.getOrElse(servedSchema)
-      private def prunedPhys: (Array[String], Array[String]) = {
-        // logical (possibly pruned) -> physical lookup names, change
-        // pseudo-columns passing through by their own names. A pruned
-        // STRUCT type physicalizes its (possibly inner-pruned) shape —
-        // the reader emits exactly the readSchema layout.
-        val colmapLower = ManifestSink.columnMapping(dir)
-          .map { case (p, l) => p.toLowerCase -> l }
-        val byLogical = physSchema.fields.zip(servedSchema.fields)
-          .map { case (p, l) => l.name.toLowerCase -> p }.toMap
-        val fs = servedPruned.fields.map { f =>
-          byLogical.get(f.name.toLowerCase) match {
-            case Some(pf) =>
-              val dt = (f.dataType, pf.dataType) match {
-                case (ls: StructType, ps: StructType) =>
-                  ManifestSink.physicalizeStruct(ls, ps, colmapLower,
-                    pf.name + ".")
-                case (la: org.apache.spark.sql.types.ArrayType,
-                    pa: org.apache.spark.sql.types.ArrayType) =>
-                  (la.elementType, pa.elementType) match {
-                    case (ls: StructType, ps: StructType) =>
-                      la.copy(elementType = ManifestSink
-                        .physicalizeStruct(ls, ps, colmapLower,
-                          pf.name + ".element."))
-                    case _ => pf.dataType
-                  }
-                case (lm: org.apache.spark.sql.types.MapType,
-                    pm: org.apache.spark.sql.types.MapType) =>
-                  (lm.valueType, pm.valueType) match {
-                    case (ls: StructType, ps: StructType) =>
-                      lm.copy(valueType = ManifestSink
-                        .physicalizeStruct(ls, ps, colmapLower,
-                          pf.name + ".value."))
-                    case _ => pf.dataType
-                  }
-                case _ => pf.dataType
-              }
-              pf.copy(dataType = dt)
-            case None => f // _change_type/_commit_version/_commit_timestamp
-          }
-        }
-        (fs.map(_.name),
-          fs.map(f => ManifestSink.typeTokOf(f.dataType)))
-      }
+      // logical (possibly pruned) -> physical names, inner struct /
+      // element / value names included; the change pseudo-columns pass
+      // through by their own names
+      private def prunedPhys: StructType =
+        ManifestSink.physicalizeStruct(servedPruned, physSchema,
+          ManifestSink.columnMapping(dir)
+            .map { case (p, l) => p.toLowerCase -> l })
       override def build(): org.apache.spark.sql.connector.read.Scan =
         new org.apache.spark.sql.connector.read.Scan
             with org.apache.spark.sql.connector.read.Batch {
-          private val (names, types) = prunedPhys
+          private val phys = prunedPhys
           override def readSchema(): StructType = servedPruned
           override def description(): String =
             s"graft.snap.$tname.changes ($since, …] " +
-              s"cols=${names.length}/${fieldNames.length}"
+              s"cols=${phys.length}/${servedSchema.length}"
           override def toBatch
               : org.apache.spark.sql.connector.read.Batch = this
           override def planInputPartitions()
@@ -578,11 +534,11 @@ private[sources] class SnapChangesTable(tname: String, dir: String)
           }
           override def createReaderFactory()
               : org.apache.spark.sql.connector.read.PartitionReaderFactory =
-            ManifestReadFactory(names, types)
+            ManifestReadFactory(phys)
           override def toMicroBatchStream(checkpointLocation: String)
               : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-            new ManifestMicroBatchStream(dir, names, types,
-              maxEpochs, onChange, cdf = true, startAt = since)
+            new ManifestMicroBatchStream(dir, phys, maxEpochs, onChange,
+              cdf = true, startAt = since)
         }
     }
   }

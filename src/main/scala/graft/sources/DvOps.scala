@@ -11,9 +11,9 @@ import org.apache.spark.sql.functions._
   * plane) lists the ROW ORDINALS deleted from exactly one data file,
   * ascending, one decimal per line. The ordinal space is the file's
   * physical row order — Spark's parquet `_metadata.row_index` on the
-  * write side and the sink's sequential group reader on the read side
-  * count it identically, which is the alignment the whole design
-  * rests on.
+  * write side and the row-index column [[ManifestReadFactory]] reads
+  * on the read side are the same ordinal, which is the alignment the
+  * whole design rests on.
   *
   * Everything here is DISTRIBUTED: matching rows are found by a
   * filtered scan carrying (`_metadata.file_name`,

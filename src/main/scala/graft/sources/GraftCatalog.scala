@@ -830,10 +830,10 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
       case ut: TableChange.UpdateColumnType =>
         // TYPE WIDENING (round 16): integrals up to long, float to
         // double — the safe-promotion set BOTH of Spark's parquet
-        // readers and the sink's own group reader serve exactly from
-        // the narrow committed bytes. One pure-metadata `#schema`
-        // epoch; the containment check accepts recorded-narrow under
-        // declared-wide, so old files keep serving. Anything else
+        // readers serve exactly from the narrow committed bytes. One
+        // pure-metadata `#schema` epoch; the containment check accepts
+        // recorded-narrow under declared-wide, so old files keep
+        // serving. Anything else
         // (narrowing, string/timestamp changes) still refuses: those
         // reinterpret committed data.
         require(ut.fieldNames().length == 1,
@@ -1584,18 +1584,9 @@ private[sources] class SnapTable(tname: String, val dir: String,
         // schema simply reads fewer columns per file (under a column
         // mapping the lookup names are the PHYSICAL ones)
         new ManifestMicroBatchStream(dir,
-          {
-            val prs = ManifestSink.physicalizeStruct(readSchema, tschema,
-              colmap.map { case (p, l) => p.toLowerCase -> l })
-            prs.fields.map(_.name)
-          },
-          {
-            val prs = ManifestSink.physicalizeStruct(readSchema, tschema,
-              colmap.map { case (p, l) => p.toLowerCase -> l })
-            prs.fields.map(f =>
-              graft.sources.ManifestSink.typeTokOf(f.dataType))
-          }, maxEpochs,
-          ManifestSink.onChangeOf(options))
+          ManifestSink.physicalizeStruct(readSchema, tschema,
+            colmap.map { case (p, l) => p.toLowerCase -> l }),
+          maxEpochs, ManifestSink.onChangeOf(options))
       }), colmap = colmap)
   }
 }
@@ -2032,10 +2023,10 @@ private[sources] class SnapScanBuilder(tname: String, input: SnapPlanInput,
     rowIdBases: () => Map[String, Long] = () => Map.empty,
     /** LIVE equality deletes (round 19): ((epoch, ABSOLUTE key-file
       * path, physical key cols)…, looseAddEpochs) — when non-empty,
-      * the scan routes through the group reader and each planned file
-      * carries its APPLICABLE key files (add-epoch < delete-epoch;
-      * files absent from the add-epoch map predate the horizon and
-      * take every delete). */
+      * the scan routes through [[ManifestReadFactory]] and each
+      * planned file carries its APPLICABLE key files (add-epoch <
+      * delete-epoch; files absent from the add-epoch map predate the
+      * horizon and take every delete). */
     eqState: () => (Seq[(Long, String, Seq[String])], Map[String, Long]) =
       () => (Seq.empty, Map.empty),
     /** Merged `#ndv` estimates (round 19): physical column → (files
@@ -2051,7 +2042,7 @@ private[sources] class SnapScanBuilder(tname: String, input: SnapPlanInput,
   // logical↔physical boundary (round 16; empty maps = identity, the
   // pre-rename fast path): pushed predicates and pruned columns arrive
   // LOGICAL and are translated once here; every pruning face, the
-  // parquet delegate and the by-name reader operate PHYSICAL; the
+  // parquet delegate and [[ManifestReadFactory]] operate PHYSICAL; the
   // served readSchema translates back so output attribute names stay
   // logical while rows pass through positionally
   private val physOfLogical: Map[String, String] =
@@ -2155,31 +2146,32 @@ private[sources] class SnapScanBuilder(tname: String, input: SnapPlanInput,
     // a read that references the `_file`/`_pos` metadata columns
     // cannot ride the parquet delegate (the files carry no such
     // fields — by-name null-fill would silently serve nulls where the
-    // file name / row ordinal belong); serve it through the sink's own
-    // by-name group reader, a partition per kept file. Rare metadata
-    // queries trade the vectorized reader for correctness; every other
-    // read keeps the delegate below.
+    // file name / row ordinal belong); serve it through
+    // [[ManifestReadFactory]], a partition per kept file, which decodes
+    // with the same Spark parquet reader and adds the metadata values.
+    // Every other read keeps the delegate below.
     val wantsFile = required.exists(_.fields.exists(f =>
       f.name.equalsIgnoreCase(SnapFileColumn.name) ||
         f.name.equalsIgnoreCase(SnapPosColumn.name) ||
         f.name.equalsIgnoreCase(SnapRowIdColumn.name)))
     // MERGE-ON-READ deletes (round 15): a kept file with live position
     // deletes cannot ride the parquet delegate (it would serve the
-    // deleted rows) — the sink's own reader applies the dv skip. The
-    // table trades the vectorized reader WHILE dvs are live; a
-    // compaction/rewrite resolves them and the delegate path returns.
+    // deleted rows) — [[ManifestReadFactory]] applies the dv skip. While
+    // dvs are live the table gives up the delegate's parquet filter
+    // pushdown and columnar batches; a compaction/rewrite resolves them
+    // and the delegate path returns.
     val dvName = (f: String) =>
       java.nio.file.Paths.get(f).getFileName.toString
     val hasDvs = kept.exists(f => dvs.get(dvName(f)).exists(_.nonEmpty))
     // EQUALITY DELETES (round 19): live `#eqdel` records force the
-    // group-reader path — the parquet delegate would serve the
-    // deleted keys. compact_data is the resolution that returns the
-    // table to the vectorized delegate.
+    // [[ManifestReadFactory]] path — the parquet delegate would serve
+    // the deleted keys. compact_data is the resolution that returns
+    // the table to the delegate.
     val (eqdels, eqAddEpochs) = eqState()
     val hasEq = eqdels.nonEmpty
     if (wantsFile || hasDvs || hasEq) {
-      // readSchema stays LOGICAL; the by-name reader looks files up
-      // under the PHYSICAL names (rows are positional)
+      // readSchema stays LOGICAL; the reader looks files up under the
+      // PHYSICAL names (rows are positional)
       val rs = required.getOrElse(logicalize(tschema))
       return new org.apache.spark.sql.connector.read.Scan
           with org.apache.spark.sql.connector.read.Batch {
@@ -2208,15 +2200,12 @@ private[sources] class SnapScanBuilder(tname: String, input: SnapPlanInput,
         }
         override def createReaderFactory()
             : org.apache.spark.sql.connector.read.PartitionReaderFactory =
-          {
-            // physical lookup names AND physical inner struct names
-            // (round 17) — the by-name group reader resolves nested
-            // fields against the file's physical layout
-            val prs = physicalize(rs)
-            ManifestReadFactory(prs.fields.map(_.name),
-              prs.fields.map(f =>
-                graft.sources.ManifestSink.typeTokOf(f.dataType)))
-          }
+          // physical names, inner struct names included (round 17): the
+          // reader resolves nested fields against the file's physical
+          // layout; eq-delete keys read at the table's types
+          ManifestReadFactory(physicalize(rs), org.apache.spark.sql.types
+            .StructType(eqdels.flatMap(_._3).distinct.flatMap(c =>
+              tschema.fields.find(_.name.equalsIgnoreCase(c)))))
         override def toMicroBatchStream(checkpointLocation: String)
             : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
           streamSource match {

@@ -1279,10 +1279,9 @@ object ManifestSink {
   /** May a column recorded as `from` be SERVED as `to` without
     * reinterpreting committed bytes (round 16, type widening — the
     * Iceberg safe-promotion set restricted to what both of Spark's
-    * parquet readers and this sink's own group reader promote
-    * exactly)? Integrals widen up to long; float widens to double.
-    * Timestamps/dates/strings never change — each would re-scale or
-    * re-encode, not widen. */
+    * parquet readers promote exactly)? Integrals widen up to long;
+    * float widens to double. Timestamps/dates/strings never change —
+    * each would re-scale or re-encode, not widen. */
   private[sources] def widens(from: org.apache.spark.sql.types.DataType,
       to: org.apache.spark.sql.types.DataType): Boolean = {
     import org.apache.spark.sql.types._
@@ -3442,9 +3441,7 @@ case class ManifestTable(path: String, writeSchema: StructType,
           override def readSchema(): StructType = writeSchema
           override def toMicroBatchStream(checkpointLocation: String)
               : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-            new ManifestMicroBatchStream(path,
-              writeSchema.fields.map(_.name),
-              writeSchema.fields.map(f => graft.sources.ManifestSink.typeTokOf(f.dataType)), maxEpochs,
+            new ManifestMicroBatchStream(path, writeSchema, maxEpochs,
               onChange)
         }
     }
@@ -4096,15 +4093,10 @@ private[graft] object ManifestWriters {
   /** A composite (struct/array) type token parsed back, None for
     * primitive tokens. Unparsable `{…}` tokens refuse loudly — a
     * malformed token here is a plumbing bug, not evolvable data. */
-  private[sources] def compositeOf(tok: String)
+  private def compositeOf(tok: String)
       : Option[org.apache.spark.sql.types.DataType] =
     if (!tok.startsWith("{")) None
     else Some(org.apache.spark.sql.types.DataType.fromJson(tok))
-
-  private[sources] def structOf(tok: String)
-      : Option[org.apache.spark.sql.types.StructType] =
-    compositeOf(tok).collect {
-      case s: org.apache.spark.sql.types.StructType => s }
 
   private def primitiveField(n: String, tok: String)
       : org.apache.parquet.schema.Type = tok match {
@@ -4624,8 +4616,9 @@ case class ManifestFilePartition(file: String,
   * convention). A limit kind the source cannot meter (no stats recorded,
   * or an unknown ReadLimit subclass) admits everything available rather
   * than silently stalling. */
-class ManifestMicroBatchStream(path: String, fieldNames: Array[String],
-    fieldTypes: Array[String], maxEpochs: Int,
+class ManifestMicroBatchStream(path: String,
+    /** PHYSICAL read schema, the rows' layout. */
+    schema: StructType, maxEpochs: Int,
     /** `refuse` (default) | `ignoreDeletes` | `ignoreChanges` — what a
       * non-append epoch in the tail does (round 17; the Delta option
       * names and semantics). */
@@ -4706,574 +4699,270 @@ class ManifestMicroBatchStream(path: String, fieldNames: Array[String],
       .map(p => p: InputPartition).toArray
   }
   override def createReaderFactory(): PartitionReaderFactory =
-    ManifestReadFactory(fieldNames, fieldTypes)
+    ManifestReadFactory(schema)
   override def deserializeOffset(json: String): Offset = EpochOffset(json.toLong)
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
 }
 
-/** Reads back the sink's own parquet task files for the table-as-a-
-  * stream face, the `_file` metadata-column scans and the row-level
-  * COW reads, resolving columns BY NAME against each file's embedded
-  * schema (a file written before an additive schema change simply
-  * serves null for the appended column — the same by-name contract the
-  * snap face gets from the parquet DSv2 delegate). Timestamps are UTC
-  * micros and dates epoch days in both parquet and `InternalRow`, so
-  * the long/int payloads pass through unconverted.
+/** Reads back the sink's own parquet task files for every lake face the
+  * parquet DSv2 delegate cannot serve alone: the table-as-a-stream and
+  * `.changes` faces, the `_file`/`_pos`/`_row_id` metadata-column
+  * scans, the row-level COW/MoR reads and snap reads with live
+  * deletion vectors or equality deletes.
   *
-  * COLUMN PRUNING (round 14): the reader asks parquet for ONLY the
-  * requested data columns that exist in the file (a projection built
-  * from the footer schema via `parquet.read.schema`) — without it,
-  * every pruned scan would still decode the full row, and the
-  * MERGE/UPDATE group-filter subquery (which reads just the join key
-  * plus `_file` to find matched groups) would pay a full-table
-  * full-width decode at 100 TB. A read that requests NO data columns
-  * at all (`count(*)`, `SELECT _file`) never opens a record reader:
+  * DECODING is Spark's own parquet reader — the one the delegate runs —
+  * built once on the driver for the physical read schema. It resolves
+  * columns by case-insensitive name against each file's footer, widens
+  * narrow committed primitives (int → long, float → double, nested
+  * included), null-fills columns and inner fields a pre-evolution file
+  * lacks, and serves each row's physical ordinal through its row-index
+  * column. This factory decides only what a partition adds on top:
+  *  - which ordinals it serves: the dv SKIP set, or the change feed's
+  *    KEEP set (round 18), read as byte ranges over just the row groups
+  *    holding kept ordinals;
+  *  - the equality-delete anti-sets (round 19);
+  *  - the `_file`/`_pos`/`_row_id`/`_change_type`/`_commit_*` values,
+  *    for a file that has no data column of that name (one that does
+  *    serves its own column).
+  * A read that finds none of its data columns in a file (`count(*)`,
+  * `SELECT _file`, a fully pre-evolution file) never opens the reader:
   * the footer's row count drives constant-row emission. */
-case class ManifestReadFactory(fieldNames: Array[String], fieldTypes: Array[String])
+final class ManifestReadFactory private (schema: StructType,
+    fileSchema: StructType,
+    read: org.apache.spark.sql.execution.datasources.PartitionedFile =>
+      Iterator[InternalRow])
     extends org.apache.spark.sql.connector.read.PartitionReaderFactory {
   import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader}
+  import ManifestReadFactory._
+
+  /** `fileSchema` ordinal of a physical column, -1 when not read. */
+  private def ordinal(name: String): Int =
+    fileSchema.fields.indexWhere(_.name.equalsIgnoreCase(name))
+  private val rowIndexOrd = fileSchema.length - 1
+
+  private def open(file: Path, start: Long, end: Long, size: Long)
+      : Iterator[InternalRow] =
+    read(org.apache.spark.sql.execution.datasources.PartitionedFile(
+      InternalRow.empty,
+      org.apache.spark.paths.SparkPath.fromPath(
+        new org.apache.hadoop.fs.Path(file.toUri)),
+      start, end - start, fileSize = size))
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val mp = partition.asInstanceOf[ManifestFilePartition]
-    val file = mp.file
-    // POSITION DELETES (round 15): load the partition's dv files into
-    // a hash set of row ordinals — O(deleted-in-file) executor memory,
-    // read once per partition. The reader skips those ordinals, so a
-    // merge-on-read delete is value-invisible to every face built on
-    // this factory (row-level scans, metadata-column scans, dv-aware
-    // batch reads).
-    val deleted: java.util.HashSet[java.lang.Long] = {
-      val s = new java.util.HashSet[java.lang.Long]()
-      mp.dvFiles.foreach { dv =>
-        val in = Files.newBufferedReader(Paths.get(dv),
-          java.nio.charset.StandardCharsets.UTF_8)
-        try {
-          var line = in.readLine()
-          while (line != null) {
-            if (line.nonEmpty) s.add(java.lang.Long.valueOf(line))
-            line = in.readLine()
-          }
-        } finally in.close()
-      }
-      s
-    }
-    // footer-first: the file's schema decides the projection (requested
-    // data columns that exist in it, by case-insensitive name), its
-    // row count serves the zero-column fast path, and its row-group
-    // layout serves KEEP-mode group skipping
-    val (fileFields, fileRows, fileBlocks) = {
-      val fr = org.apache.parquet.hadoop.ParquetFileReader.open(
-        new org.apache.parquet.io.LocalInputFile(Paths.get(file)))
-      try (fr.getFooter.getFileMetaData.getSchema.getFields,
-        fr.getRecordCount,
-        fr.getFooter.getBlocks.asScala.toSeq)
-      finally fr.close()
+    val file = Paths.get(mp.file)
+    // POSITION DELETES (round 15): the partition's dv files as a hash
+    // set of row ordinals — O(deleted-in-file) executor memory, read
+    // once per partition
+    val deleted = new java.util.HashSet[java.lang.Long]()
+    mp.dvFiles.foreach { dv =>
+      Files.readAllLines(Paths.get(dv)).asScala.foreach { line =>
+        if (line.nonEmpty) deleted.add(java.lang.Long.valueOf(line)) }
     }
     // change-feed KEEP mode (round 17): the dv positions are the rows
     // to EMIT, not to skip
     def skipPos(p: Long): Boolean =
       if (mp.keepPositions) !deleted.contains(p) else deleted.contains(p)
-    // EQUALITY DELETES (round 19): the partition's applicable key
-    // files load into per-colset anti-sets (cached per immutable file
-    // — O(deleted keys) executor memory, the Iceberg eq-delete
-    // caveat; compaction is the resolution). Rows whose normalized
-    // key tuple matches any set are skipped; a null key never matches
-    // (SQL delete-where semantics).
-    val eqKeySets: Seq[(Seq[String], java.util.HashSet[Seq[Any]])] =
-      mp.eqFiles.map { case (p, cols) =>
-        (cols, ManifestReadFactory.eqKeySet(p, cols)) }
-    val eqColsNeeded: Seq[String] = mp.eqFiles.flatMap(_._2).distinct
-    // STRUCT/ARRAY columns ride as JSON type tokens (rounds 17/18)
-    val compositeTypes: Array[org.apache.spark.sql.types.DataType] =
-      fieldTypes.map(t => ManifestWriters.compositeOf(t).orNull)
-    val wanted = fieldNames.filterNot(n =>
-      n.equalsIgnoreCase("_file") || n.equalsIgnoreCase("_pos") ||
-        n.equalsIgnoreCase("_row_id") ||
-        n.equalsIgnoreCase("_change_type") ||
-        n.equalsIgnoreCase("_commit_version") ||
-        n.equalsIgnoreCase("_commit_timestamp"))
-    // `_row_id` (round 19): a requested row id decodes the file's
-    // MATERIALIZED `_graft_rowid` column when one exists (a COW
-    // rewrite/compaction carried these rows), else computes base+pos
-    val wantRowId = fieldNames.exists(_.equalsIgnoreCase("_row_id"))
-    val projected = new java.util.ArrayList[org.apache.parquet.schema.Type]()
-    (0 until fileFields.size()).foreach { j =>
-      val f = fileFields.get(j)
-      if (wanted.exists(_.equalsIgnoreCase(f.getName)) ||
-          (wantRowId && f.getName.equalsIgnoreCase(
-            ManifestSink.RowIdColumnName)) ||
-          // eq-delete key columns decode even when unrequested (the
-          // skip test needs them); a file LACKING a key column serves
-          // null for it — those rows survive, so the zero-projection
-          // fast path below stays valid for such files
-          eqColsNeeded.exists(_.equalsIgnoreCase(f.getName)))
-        projected.add(f)
+    val (fileColumns, fileRows, fileBlocks) = {
+      val fr = org.apache.parquet.hadoop.ParquetFileReader.open(
+        new org.apache.parquet.io.LocalInputFile(file))
+      try (fr.getFooter.getFileMetaData.getSchema.getFields.asScala
+          .map(_.getName.toLowerCase).toSet,
+        fr.getRecordCount,
+        fr.getFooter.getBlocks.asScala.toIndexedSeq)
+      finally fr.close()
     }
-    if (projected.isEmpty) {
-      // no data column lives in this file (count(*) / metadata-only
-      // scans, or a fully pre-evolution file): nothing is decoded — the
-      // footer's row count drives emission, ordinals are enumerated
-      // (skipping deleted positions) only because `_pos` may be asked
-      val posIdx = fieldNames.indexWhere(_.equalsIgnoreCase("_pos"))
-      // an un-materialized file's `_row_id` is base+pos (a file WITH a
-      // materialized column never takes this path — it was projected)
-      val ridIdx = fieldNames.indexWhere(_.equalsIgnoreCase("_row_id"))
-      return new PartitionReader[InternalRow] {
-        private var pos = -1L
-        private val row = new org.apache.spark.sql.catalyst.expressions
-          .GenericInternalRow(fieldNames.indices.map[Any] { i =>
-            if (fieldNames(i).equalsIgnoreCase("_file"))
-              org.apache.spark.unsafe.types.UTF8String.fromString(
-                Paths.get(file).getFileName.toString)
-            else if (fieldNames(i).equalsIgnoreCase("_change_type") &&
-                mp.changeType != null)
-              org.apache.spark.unsafe.types.UTF8String.fromString(mp.changeType)
-            else if (fieldNames(i).equalsIgnoreCase("_commit_version") &&
-                mp.changeType != null) mp.commitVersion
-            else if (fieldNames(i).equalsIgnoreCase("_commit_timestamp") &&
-                mp.changeType != null) mp.commitTsMicros
-            else null
-          }.toArray)
-        override def next(): Boolean = {
-          pos += 1
-          while (pos < fileRows && skipPos(pos)) pos += 1
-          pos < fileRows
-        }
-        override def get(): InternalRow = {
-          if (posIdx >= 0) row.update(posIdx, pos)
-          if (ridIdx >= 0) row.update(ridIdx,
-            if (mp.rowIdBase >= 0) mp.rowIdBase + pos else null)
-          row
-        }
-        override def close(): Unit = ()
-      }
+    val decodes = fileSchema.fields.init
+      .exists(f => fileColumns(f.name.toLowerCase))
+    // EQUALITY DELETES (round 19): rows whose key tuple matches an
+    // applicable key file's anti-set are skipped; a null key never
+    // matches (SQL delete-where semantics)
+    val eqKeySets = mp.eqFiles.map { case (p, cols) =>
+      val ords = cols.map(ordinal).toArray
+      (ords, keySet(p, ords))
     }
-    // KEEP-mode ROW-GROUP SKIPPING (round 18): a change-feed pre-image
-    // read targets a handful of positions in a possibly-wide file —
-    // decoding every row group for that is O(file), not O(changed
-    // rows). With a KEEP set, only the groups whose row ranges hold
-    // kept ordinals are decoded: contiguous needed groups read through
-    // one `withFileRange` reader each (the parquet midpoint contract),
-    // and the row ordinal tracks each run's true starting row. Skip
-    // mode (dv-applying reads) must emit every surviving row and
-    // cannot group-skip.
-    case class RgRun(startRow: Long, rangeStart: Long, rangeEnd: Long)
-    val runs: Seq[RgRun] =
-      if (!mp.keepPositions || deleted.isEmpty || fileBlocks.isEmpty)
-        Seq(RgRun(0L, 0L, Long.MaxValue))
+    val size = Files.size(file)
+    // KEEP-mode ROW-GROUP SKIPPING (round 18): a pre-image read of a
+    // few positions in a wide file reads only the groups holding them
+    // — contiguous groups as one byte range (the parquet midpoint
+    // contract). Skip mode must emit every surviving row.
+    val ranges: Iterator[(Long, Long)] =
+      if (!mp.keepPositions) Iterator((0L, size))
       else {
-        val starts = fileBlocks.scanLeft(0L)(_ + _.getRowCount)
-        val needed = fileBlocks.indices.filter { i =>
-          val it = deleted.iterator()
-          var hit = false
-          while (!hit && it.hasNext) {
-            val p = it.next().longValue()
-            hit = p >= starts(i) && p < starts(i + 1)
-          }
-          hit
+        val starts = fileBlocks.scanLeft(0L)(_ + _.getRowCount).toArray
+        val groups = deleted.asScala.toSeq.map { p =>
+          val i = java.util.Arrays.binarySearch(starts, p.longValue)
+          if (i >= 0) i else -i - 2
+        }.filter(i => i >= 0 && i < fileBlocks.size).distinct.sorted
+        groups.foldLeft(List.empty[(Int, Int)]) {
+          case ((first, last) :: runs, g) if g == last + 1 => (first, g) :: runs
+          case (runs, g) => (g, g) :: runs
+        }.reverseIterator.map { case (first, last) =>
+          (fileBlocks(first).getStartingPos,
+            fileBlocks(last).getStartingPos + fileBlocks(last).getCompressedSize)
         }
-        // contiguous ordinals collapse into one ranged reader
-        val runBuf = scala.collection.mutable.ArrayBuffer[RgRun]()
-        var k = 0
-        while (k < needed.size) {
-          val first = needed(k)
-          var last = first
-          while (k + 1 < needed.size && needed(k + 1) == last + 1) {
-            k += 1; last = needed(k)
-          }
-          runBuf += RgRun(starts(first),
-            fileBlocks(first).getStartingPos,
-            fileBlocks(last).getStartingPos +
-              fileBlocks(last).getCompressedSize)
-          k += 1
-        }
-        runBuf.toSeq
       }
+    // each output field's source: a reader ordinal (>= 0), the row
+    // ordinal, the row id, or a per-partition constant. A file with a
+    // REAL column of a metadata name (a table archiving a change feed
+    // stores `_change_type`/`_commit_*`) serves that column: its
+    // stored values must read back, and survive a rewrite
+    val names = schema.fields.map(_.name.toLowerCase)
+    val src = names.map {
+      case n if !MetaColumns(n) || fileColumns(n) => ordinal(n)
+      case "_pos" => Pos
+      case "_row_id" => RowId
+      case _ => Const
+    }
+    def utf8(s: String) = org.apache.spark.unsafe.types.UTF8String.fromString(s)
+    val changes = mp.changeType != null
+    val consts: Array[Any] = names.map {
+      case "_file" => utf8(file.getFileName.toString)
+      case "_change_type" if changes => utf8(mp.changeType)
+      case "_commit_version" if changes => mp.commitVersion
+      case "_commit_timestamp" if changes => mp.commitTsMicros
+      case _ => null
+    }
+    val getters = schema.fields.map(f =>
+      InternalRow.getAccessor(f.dataType, nullable = true))
+    // `_row_id` (round 19): a MATERIALIZED `_graft_rowid` value wins (a
+    // carried row keeps its identity across a rewrite); a null/absent
+    // one is a fresh row — base + ordinal; an untracked file serves null
+    val rowIdOrd = ordinal(ManifestSink.RowIdColumnName)
+
     new PartitionReader[InternalRow] {
-      private def openRun(r: RgRun)
-          : org.apache.parquet.hadoop.ParquetReader[org.apache.parquet.example.data.Group] = {
-        val conf = new org.apache.hadoop.conf.Configuration()
-        conf.set(org.apache.parquet.hadoop.api.ReadSupport.PARQUET_READ_SCHEMA,
-          new org.apache.parquet.schema.MessageType(
-            "graft_manifest_projection", projected).toString)
-        org.apache.parquet.hadoop.ParquetReader
-          .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(),
-            new org.apache.hadoop.fs.Path(file))
-          .withConf(conf)
-          .withFileRange(r.rangeStart, r.rangeEnd)
-          .build()
-      }
-      private var runIdx = -1
-      private var in: org.apache.parquet.hadoop.ParquetReader[
-        org.apache.parquet.example.data.Group] = _
-      private var cur: org.apache.parquet.example.data.Group = _
-      // requested-to-file column index, resolved CASE-INSENSITIVELY
-      // against the file's embedded schema (advisor r13: the rest of
-      // the stack — schema verification, stats lookup — is
-      // case-insensitive, and a declared schema differing only in case
-      // must serve values, not silently null-fill); exact-case match
-      // wins when the file carries both spellings. -1 = absent
-      // (pre-evolution file). Cached per file schema instance.
-      private var resolvedFor: org.apache.parquet.schema.GroupType = _
-      private var fidx: Array[Int] = _
-      private var fprim: Array[org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName] = _
-      private def resolve(t: org.apache.parquet.schema.GroupType): Array[Int] =
-        fieldNames.map { n0 =>
-          // `_row_id` looks up the file's MATERIALIZED id column
-          val n = if (n0.equalsIgnoreCase("_row_id"))
-            ManifestSink.RowIdColumnName else n0
-          if (t.containsField(n)) t.getFieldIndex(n)
-          else {
-            val fs = t.getFields
-            var found = -1
-            var j = 0
-            while (found < 0 && j < fs.size()) {
-              if (fs.get(j).getName.equalsIgnoreCase(n)) found = j
-              j += 1
-            }
-            found
-          }
+      private var in: Iterator[InternalRow] = Iterator.empty
+      private var cur: InternalRow = _ // null on the footer-count path
+      private var pos = -1L
+      private def eqDeleted(r: InternalRow): Boolean =
+        eqKeySets.exists { case (ords, set) =>
+          val tuple = keyOf(r, ords)
+          tuple != null && set.contains(tuple)
         }
-      private var pos = -1L // row ordinal within the file
-      private def nextRun(): Boolean = {
-        if (in != null) { in.close(); in = null }
-        runIdx += 1
-        if (runIdx >= runs.size) false
-        else {
-          in = openRun(runs(runIdx))
-          pos = runs(runIdx).startRow - 1
-          true
-        }
-      }
-      // eq-delete key indices resolved against the file's schema,
-      // cached per group-type instance (round 19)
-      private var eqResolvedFor: org.apache.parquet.schema.GroupType = _
-      private var eqIdx: Array[Array[Int]] = _
-      private def eqDeleted(g: org.apache.parquet.example.data.Group): Boolean = {
-        if (eqKeySets.isEmpty) return false
-        val t = g.getType
-        if (eqResolvedFor ne t) {
-          eqResolvedFor = t
-          eqIdx = eqKeySets.map(_._1.map { c =>
-            val fs = t.getFields
-            var found = -1
-            var j = 0
-            while (found < 0 && j < fs.size()) {
-              if (fs.get(j).getName.equalsIgnoreCase(c)) found = j
-              j += 1
-            }
-            found
-          }.toArray).toArray
-        }
-        var k = 0
-        while (k < eqKeySets.length) {
-          val idx = eqIdx(k)
-          val tuple = new Array[Any](idx.length)
-          var ok = true
-          var j = 0
-          while (ok && j < idx.length) {
-            val v =
-              if (idx(j) < 0 || g.getFieldRepetitionCount(idx(j)) == 0) null
-              else ManifestReadFactory.normalizedValue(g, idx(j))
-            if (v == null) ok = false else tuple(j) = v
-            j += 1
-          }
-          if (ok && eqKeySets(k)._2.contains(tuple.toSeq)) return true
-          k += 1
-        }
-        false
-      }
       override def next(): Boolean = {
         while (true) {
-          if (in == null && !nextRun()) return false
-          cur = in.read(); pos += 1
-          if (cur == null) { in.close(); in = null }
-          else {
-            ManifestReadFactory.rowsDecoded.incrementAndGet()
+          if (decodes) {
+            while (!in.hasNext) {
+              if (!ranges.hasNext) return false
+              closeIn()
+              val (start, end) = ranges.next()
+              in = open(file, start, end, size)
+            }
+            cur = in.next()
+            pos = cur.getLong(rowIndexOrd)
+            rowsDecoded.incrementAndGet()
             if (!skipPos(pos) && !eqDeleted(cur)) return true
+          } else {
+            pos += 1
+            if (pos >= fileRows) return false
+            if (!skipPos(pos)) return true
           }
         }
         false
       }
       override def get(): InternalRow = {
-        val fileType = cur.getType
-        if (resolvedFor ne fileType) {
-          resolvedFor = fileType
-          fidx = resolve(fileType)
-          fprim = fileType.getFields.asScala.map(f =>
-            if (f.isPrimitive) f.asPrimitiveType().getPrimitiveTypeName
-            else null).toArray
-        }
-        new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-          fieldTypes.indices.map[Any] { i =>
-            if (fieldNames(i).equalsIgnoreCase("_row_id")) {
-              // row tracking (round 19): materialized id wins (a
-              // carried row keeps its identity across the move); a
-              // null/absent materialized value is a FRESH row — its id
-              // is the file's base + ordinal; an untracked file serves
-              // null (pre-r19: no identity to invent)
-              if (fidx(i) >= 0 && cur.getFieldRepetitionCount(fidx(i)) > 0)
-                cur.getLong(fidx(i), 0)
+        val out = new Array[Any](src.length)
+        var i = 0
+        while (i < src.length) {
+          out(i) = src(i) match {
+            case Pos => pos
+            case RowId =>
+              if (cur != null && rowIdOrd >= 0 && !cur.isNullAt(rowIdOrd))
+                cur.getLong(rowIdOrd)
               else if (mp.rowIdBase >= 0) mp.rowIdBase + pos
               else null
-            }
-            else if (fidx(i) < 0) {
-              // `_file`/`_pos` metadata columns (rounds 14/16): the file
-              // carries no such field, so serve the partition's base
-              // name / the row's physical ordinal — a file with a REAL
-              // column of that name resolves above and wins
-              if (fieldNames(i).equalsIgnoreCase("_file"))
-                org.apache.spark.unsafe.types.UTF8String.fromString(
-                  java.nio.file.Paths.get(file).getFileName.toString)
-              else if (fieldNames(i).equalsIgnoreCase("_pos")) pos
-              else if (fieldNames(i).equalsIgnoreCase("_change_type") &&
-                  mp.changeType != null)
-                org.apache.spark.unsafe.types.UTF8String.fromString(
-                  mp.changeType)
-              else if (fieldNames(i).equalsIgnoreCase("_commit_version") &&
-                  mp.changeType != null) mp.commitVersion
-              else if (fieldNames(i).equalsIgnoreCase("_commit_timestamp")
-                  && mp.changeType != null) mp.commitTsMicros
-              else null // pre-evolution file
-            }
-            else {
-              val fi = fidx(i)
-              if (cur.getFieldRepetitionCount(fi) == 0) null
-              else if (compositeTypes(i) != null) compositeTypes(i) match {
-                // STRUCT/ARRAY/MAP column (rounds 17/18): inner fields
-                // resolve BY NAME against the file's group — a
-                // pre-evolution file missing an added inner field
-                // serves null, a pre-widening narrow inner primitive
-                // promotes, both exactly the top-level contracts
-                // applied recursively (array elements and map values
-                // included)
-                case st: org.apache.spark.sql.types.StructType =>
-                  ManifestReadFactory.groupToRow(cur.getGroup(fi, 0), st)
-                case at: org.apache.spark.sql.types.ArrayType =>
-                  ManifestReadFactory.groupToArray(cur.getGroup(fi, 0), at)
-                case mt: org.apache.spark.sql.types.MapType =>
-                  ManifestReadFactory.groupToMap(cur.getGroup(fi, 0), mt)
-                case other => throw new IllegalArgumentException(
-                  s"manifest reader cannot decode a $other column")
-              }
-              else fieldTypes(i) match {
-                // pre-widening files store the NARROW primitive (round
-                // 16, type widening): promote by the file's own
-                // physical type, exactly as the parquet delegate does
-                case "long" =>
-                  if (fprim(fi) == org.apache.parquet.schema
-                      .PrimitiveType.PrimitiveTypeName.INT32)
-                    cur.getInteger(fi, 0).toLong
-                  else cur.getLong(fi, 0)
-                case "timestamp" => cur.getLong(fi, 0)
-                case "integer" | "date" => cur.getInteger(fi, 0)
-                case "short" => cur.getInteger(fi, 0).toShort
-                case "byte" => cur.getInteger(fi, 0).toByte
-                case "double" =>
-                  if (fprim(fi) == org.apache.parquet.schema
-                      .PrimitiveType.PrimitiveTypeName.FLOAT)
-                    cur.getFloat(fi, 0).toDouble
-                  else cur.getDouble(fi, 0)
-                case "float" => cur.getFloat(fi, 0)
-                case "boolean" => cur.getBoolean(fi, 0)
-                case "string" => org.apache.spark.unsafe.types.UTF8String
-                  .fromBytes(cur.getBinary(fi, 0).getBytes)
-                case other => throw new IllegalArgumentException(
-                  "manifest stream supports long/integer/short/byte/double/" +
-                    s"float/boolean/string/timestamp/date columns, got $other")
-              }
-            }
-          }.toArray)
+            case Const => consts(i)
+            case o => if (cur == null) null else getters(i)(cur, o)
+          }
+          i += 1
+        }
+        new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(out)
       }
-      override def close(): Unit = if (in != null) in.close()
-    }
-  }
-}
-
-object ManifestReadFactory {
-  /** Parquet rows DECODED by the group reader — observability for the
-    * KEEP-mode row-group skipping pin: a pre-image read of K positions
-    * in a multi-group file must decode O(groups holding K), not
-    * O(file). */
-  private[graft] val rowsDecoded = new java.util.concurrent.atomic.AtomicLong
-
-  /** One field of a parquet group NORMALIZED for equality-delete key
-    * comparison (round 19): the long family as Long, strings as
-    * String — the same scale on the data and key sides (both written
-    * by this sink's writer), so a tuple match can never disagree on
-    * encoding. Unsupported types answer null = never matches. */
-  private[sources] def normalizedValue(
-      g: org.apache.parquet.example.data.Group, fi: Int): Any = {
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-    val f = g.getType.getType(fi)
-    if (!f.isPrimitive) null
-    else f.asPrimitiveType().getPrimitiveTypeName match {
-      case INT64 => g.getLong(fi, 0)
-      case INT32 => g.getInteger(fi, 0).toLong
-      case BINARY => g.getBinary(fi, 0).toStringUsingUTF8
-      case _ => null
+      private def closeIn(): Unit = in match {
+        case c: java.io.Closeable => c.close()
+        case _ =>
+      }
+      override def close(): Unit = closeIn()
     }
   }
 
-  /** An equality-delete key file as a tuple anti-set, cached per
-    * immutable file identity (committed files never rewrite) — one
-    * decode per executor per file, shared by every partition that
-    * applies it. Tuples with null keys drop (null never matches). */
-  private val EqCacheCap = 64
-  private val eqCache = new java.util.concurrent.ConcurrentHashMap[
-    String, java.util.HashSet[Seq[Any]]]()
-  private[sources] def eqKeySet(path: String, cols: Seq[String])
+  /** Key tuple of `r` at `ords`, null when any key is null or unread
+    * (null never matches). Strings copy out of the reader's buffers. */
+  private def keyOf(r: InternalRow, ords: Array[Int]): Seq[Any] = {
+    val tuple = new Array[Any](ords.length)
+    var j = 0
+    while (j < ords.length) {
+      if (ords(j) < 0 || r.isNullAt(ords(j))) return null
+      tuple(j) = r.get(ords(j), fileSchema(ords(j)).dataType) match {
+        case s: org.apache.spark.unsafe.types.UTF8String => s.copy()
+        case v => v
+      }
+      j += 1
+    }
+    tuple.toSeq
+  }
+
+  /** An equality-delete key file as a tuple anti-set, read through the
+    * same reader (its data columns simply null-fill) and cached per
+    * immutable file identity and key columns — one read per executor
+    * per file, shared by every partition applying it. */
+  private def keySet(path: String, ords: Array[Int])
       : java.util.HashSet[Seq[Any]] = {
-    val attrs = Files.readAttributes(Paths.get(path),
+    val p = Paths.get(path)
+    val attrs = Files.readAttributes(p,
       classOf[java.nio.file.attribute.BasicFileAttributes])
     val key = s"$path|${attrs.size}|${attrs.lastModifiedTime.toMillis}|" +
-      cols.mkString(",")
+      ords.map(o => if (o < 0) "-" else fileSchema(o).toDDL).mkString(",")
     val hit = eqCache.get(key)
     if (hit != null) return hit
     val set = new java.util.HashSet[Seq[Any]]()
-    val reader = org.apache.parquet.hadoop.ParquetReader
-      .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(),
-        new org.apache.hadoop.fs.Path(path))
-      .withConf(new org.apache.hadoop.conf.Configuration())
-      .build()
-    try {
-      var g = reader.read()
-      var idx: Array[Int] = null
-      var resolvedFor: org.apache.parquet.schema.GroupType = null
-      while (g != null) {
-        val t = g.getType
-        if (resolvedFor ne t) {
-          resolvedFor = t
-          idx = cols.map { c =>
-            val fs = t.getFields
-            var found = -1
-            var j = 0
-            while (found < 0 && j < fs.size()) {
-              if (fs.get(j).getName.equalsIgnoreCase(c)) found = j
-              j += 1
-            }
-            found
-          }.toArray
-        }
-        val tuple = new Array[Any](idx.length)
-        var ok = true
-        var j = 0
-        while (ok && j < idx.length) {
-          val v = if (idx(j) < 0 || g.getFieldRepetitionCount(idx(j)) == 0)
-            null else normalizedValue(g, idx(j))
-          if (v == null) ok = false else tuple(j) = v
-          j += 1
-        }
-        if (ok) set.add(tuple.toSeq)
-        g = reader.read()
-      }
-    } finally reader.close()
+    open(p, 0L, attrs.size, attrs.size).foreach { r =>
+      val t = keyOf(r, ords)
+      if (t != null) set.add(t)
+    }
     if (eqCache.size >= EqCacheCap) eqCache.clear()
     eqCache.put(key, set)
     set
   }
-  /** One parquet GROUP value as an `InternalRow` of `want` — inner
-    * fields resolve by case-insensitive NAME against the file's own
-    * group type (absent → null: a pre-evolution file simply lacks an
-    * added inner field) and narrow committed primitives PROMOTE
-    * (int-family → long, float → double: nested type widening). */
-  private[sources] def groupToRow(g: org.apache.parquet.example.data.Group,
-      want: org.apache.spark.sql.types.StructType): InternalRow = {
-    import org.apache.spark.sql.types._
-    val t = g.getType
-    new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-      want.fields.map[Any] { f =>
-        val fi = {
-          if (t.containsField(f.name)) t.getFieldIndex(f.name)
-          else {
-            val fs = t.getFields
-            var found = -1
-            var j = 0
-            while (found < 0 && j < fs.size()) {
-              if (fs.get(j).getName.equalsIgnoreCase(f.name)) found = j
-              j += 1
-            }
-            found
-          }
-        }
-        if (fi < 0 || g.getFieldRepetitionCount(fi) == 0) null
-        else decodeValue(g, fi, f.dataType)
-      })
-  }
+}
 
-  /** One parquet LIST group as Catalyst [[ArrayData]] (round 18): one
-    * element per repeated `list` entry, an entry with its `element`
-    * unset decoding to a null element. Element evolution rides the
-    * same by-name/promoting recursion as struct fields. */
-  private[sources] def groupToArray(g: org.apache.parquet.example.data.Group,
-      want: org.apache.spark.sql.types.ArrayType)
-      : org.apache.spark.sql.catalyst.util.ArrayData = {
-    val n = g.getFieldRepetitionCount(0)
-    val vals = new Array[Any](n)
-    var k = 0
-    while (k < n) {
-      val entry = g.getGroup(0, k)
-      vals(k) =
-        if (entry.getFieldRepetitionCount(0) == 0) null
-        else decodeValue(entry, 0, want.elementType)
-      k += 1
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(vals)
-  }
+object ManifestReadFactory {
+  private val Pos = -1
+  private val RowId = -2
+  private val Const = -3
+  /** Served by the factory for a file that has no column of the name. */
+  private val MetaColumns = Set("_file", "_pos", "_row_id", "_change_type",
+    "_commit_version", "_commit_timestamp")
 
-  /** One parquet MAP group as Catalyst [[ArrayBasedMapData]] (round
-    * 18): one pair per repeated `key_value` entry; an entry with its
-    * `value` unset decodes to a null value. Value evolution rides the
-    * same by-name/promoting recursion as array elements. */
-  private[sources] def groupToMap(g: org.apache.parquet.example.data.Group,
-      want: org.apache.spark.sql.types.MapType)
-      : org.apache.spark.sql.catalyst.util.MapData = {
-    val n = g.getFieldRepetitionCount(0)
-    val keys = new Array[Any](n)
-    val vals = new Array[Any](n)
-    var k = 0
-    while (k < n) {
-      val entry = g.getGroup(0, k)
-      keys(k) = decodeValue(entry, 0, want.keyType)
-      vals(k) =
-        if (entry.getFieldRepetitionCount(1) == 0) null
-        else decodeValue(entry, 1, want.valueType)
-      k += 1
-    }
-    org.apache.spark.sql.catalyst.util.ArrayBasedMapData(keys, vals)
-  }
+  /** Parquet rows the reader yields to a factory, before dv/eq
+    * filtering — observability for the KEEP-mode row-group skipping
+    * pin: a pre-image read of K positions in a multi-group file must
+    * decode O(groups holding K), not O(file). */
+  private[graft] val rowsDecoded = new java.util.concurrent.atomic.AtomicLong
 
-  /** Decode field `fi` of `g` as `want` — the shared scalar/composite
-    * decode with narrow-committed-primitive PROMOTION (int family →
-    * long, float → double) by the file's own physical type. */
-  private def decodeValue(g: org.apache.parquet.example.data.Group,
-      fi: Int, want: org.apache.spark.sql.types.DataType): Any = {
-    import org.apache.spark.sql.types._
-    val t = g.getType
-    def prim = t.getType(fi).asPrimitiveType().getPrimitiveTypeName
-    want match {
-      case inner: StructType => groupToRow(g.getGroup(fi, 0), inner)
-      case inner: ArrayType => groupToArray(g.getGroup(fi, 0), inner)
-      case inner: MapType => groupToMap(g.getGroup(fi, 0), inner)
-      case LongType =>
-        if (prim == org.apache.parquet.schema.PrimitiveType
-            .PrimitiveTypeName.INT32) g.getInteger(fi, 0).toLong
-        else g.getLong(fi, 0)
-      case TimestampType => g.getLong(fi, 0)
-      case IntegerType | DateType => g.getInteger(fi, 0)
-      case ShortType => g.getInteger(fi, 0).toShort
-      case ByteType => g.getInteger(fi, 0).toByte
-      case DoubleType =>
-        if (prim == org.apache.parquet.schema.PrimitiveType
-            .PrimitiveTypeName.FLOAT) g.getFloat(fi, 0).toDouble
-        else g.getDouble(fi, 0)
-      case FloatType => g.getFloat(fi, 0)
-      case BooleanType => g.getBoolean(fi, 0)
-      case StringType => org.apache.spark.unsafe.types.UTF8String
-        .fromBytes(g.getBinary(fi, 0).getBytes)
-      case other => throw new IllegalArgumentException(
-        s"manifest reader cannot decode a value of type $other")
-    }
+  private val EqCacheCap = 64
+  private val eqCache = new java.util.concurrent.ConcurrentHashMap[
+    String, java.util.HashSet[Seq[Any]]]()
+
+  /** The factory for `schema` (PHYSICAL names, the output layout) —
+    * builds Spark's parquet reader here, on the driver. `keys` are the
+    * table's equality-delete key columns: they decode even when the
+    * read prunes them. */
+  def apply(schema: StructType,
+      keys: StructType = new StructType()): ManifestReadFactory = {
+    import org.apache.spark.sql.types.{LongType, StructField}
+    // metadata names stay in the read schema: a file lacking the
+    // column null-fills it, and `createReader` serves the metadata
+    // value for it instead
+    val data = schema.fields ++
+      (if (schema.fields.exists(_.name.equalsIgnoreCase("_row_id")))
+        Seq(StructField(ManifestSink.RowIdColumnName, LongType))
+       else Nil) ++ keys.fields
+    val fileSchema = StructType(data.distinctBy(_.name.toLowerCase) :+
+      StructField(org.apache.spark.sql.execution.datasources.parquet
+        .ParquetFileFormat.ROW_INDEX_TEMPORARY_COLUMN_NAME, LongType))
+    new ManifestReadFactory(schema, fileSchema,
+      org.apache.spark.sql.graftbridge.Bridge.parquetReader(fileSchema))
   }
 }

@@ -157,8 +157,8 @@ private[sources] class SnapDeltaScanBuilder(op: SnapDeltaOperation)
 }
 
 /** One scan over the operation's pinned snapshot: a partition per
-  * candidate file, served through the shared by-name group reader with
-  * the file's live dvs applied and (`_file`, `_pos`) alongside. */
+  * candidate file, served through [[ManifestReadFactory]] with the
+  * file's live dvs applied and (`_file`, `_pos`) alongside. */
 private[sources] class SnapDeltaScan(op: SnapDeltaOperation,
     candidates: Seq[String], rs: StructType) extends Scan with Batch {
   override def readSchema(): StructType = rs
@@ -171,11 +171,7 @@ private[sources] class SnapDeltaScan(op: SnapDeltaOperation,
   override def createReaderFactory(): PartitionReaderFactory =
     // physical lookup names (incl. struct inner names, round 17);
     // logical (positional) readSchema
-    locally {
-      val prs = op.physicalize(rs)
-      ManifestReadFactory(prs.fields.map(_.name),
-        prs.fields.map(f => graft.sources.ManifestSink.typeTokOf(f.dataType)))
-    }
+    ManifestReadFactory(op.physicalize(rs))
 }
 
 /** The position-delta write: dv files for deleted/replaced positions,

@@ -245,9 +245,8 @@ private[sources] class SnapRowLevelScanBuilder(op: SnapRowLevelOperation)
 }
 
 /** One scan over the operation's pinned snapshot: a partition per
-  * committed file, read back through the shared by-name parquet group
-  * reader ([[ManifestReadFactory]], which serves `_file` as the
-  * partition's file name). Implements `SupportsRuntimeV2Filtering` on
+  * committed file, read back through [[ManifestReadFactory]] (Spark's
+  * parquet reader plus `_file` served as the partition's file name). Implements `SupportsRuntimeV2Filtering` on
   * `_file`: when Spark's group-filter subquery delivers the matched
   * file set, BOTH this scan's partitions and the operation's
   * `#remove` set narrow to it — planned partitions and removed files
@@ -287,11 +286,7 @@ private[sources] class SnapRowLevelScan(op: SnapRowLevelOperation,
   override def createReaderFactory(): PartitionReaderFactory =
     // by-name file lookup under the PHYSICAL names; `rs` (and the rows,
     // positionally) stay logical
-    locally {
-      val prs = op.physicalize(rs)
-      ManifestReadFactory(prs.fields.map(_.name),
-        prs.fields.map(f => graft.sources.ManifestSink.typeTokOf(f.dataType)))
-    }
+    ManifestReadFactory(op.physicalize(rs))
 
   override def filterAttributes(): Array[NamedReference] =
     Array(Expressions.column(SnapFileColumn.name))

@@ -1042,9 +1042,10 @@ object StreamOps {
     * READING THE TARGET (the foreachBatch MERGE in [[upsertStreamed]]
     * re-reads touched buckets per trigger; this sink writes O(batch)
     * bytes and nothing else — the shape a 100 TB keyed CDC ingest
-    * needs). Reads apply the key anti-sets in the group reader;
-    * `compact_data` resolves them back to plain files. In-query pins:
-    * the sink really never read the target (the group-reader decode
+    * needs). Reads apply the key anti-sets in
+    * [[graft.sources.ManifestReadFactory]]; `compact_data` resolves
+    * them back to plain files. In-query pins:
+    * the sink really never read the target (the factory's decode
     * counter is unmoved by the streaming phase), every data batch
     * committed an `upsert` epoch, and the post-compaction state is
     * value-identical with zero live records. Oracle: identical to

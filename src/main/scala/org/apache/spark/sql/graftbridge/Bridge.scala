@@ -41,6 +41,27 @@ object Bridge {
     case _ =>
   }
 
+  /** Spark's own parquet reader as a function of one file range — the
+    * decode `FileSourceScanExec` runs, built outside any plan for the
+    * active (executing) session; its Hadoop conf and
+    * `StructType.asNullable` are private to Spark. Every field reads
+    * nullable, because a file may lack any requested column; rows come
+    * back one at a time, not as batches. The temporary row-index
+    * column, when `schema` names it, serves each row's physical ordinal
+    * in its file. */
+  def parquetReader(schema: org.apache.spark.sql.types.StructType)
+      : org.apache.spark.sql.execution.datasources.PartitionedFile =>
+        Iterator[org.apache.spark.sql.catalyst.InternalRow] = {
+    val s = org.apache.spark.sql.classic.SparkSession.active
+    val nullable = schema.asNullable
+    new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat()
+      .buildReaderWithPartitionValues(s, nullable,
+        new org.apache.spark.sql.types.StructType(), nullable, Nil,
+        Map(org.apache.spark.sql.execution.datasources.FileFormat
+          .OPTION_RETURNING_BATCH -> "false"),
+        s.sessionState.newHadoopConf())
+  }
+
   /** Catalyst predicate → public v1 `Filter` (the translation
     * `DataSourceStrategy` applies for v1 pushdown), for connectors that
     * evaluate predicates against their own metadata (graft's `#stats`

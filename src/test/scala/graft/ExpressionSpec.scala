@@ -184,6 +184,41 @@ class ExpressionSpec extends AnyFunSuite {
       fastPq.collect().map(_.toSeq).toSeq.sortBy(_.head.asInstanceOf[Long].toString))
   }
 
+  test("ArgAssign: a mistyped or incomplete model fails at ANALYSIS with " +
+      "a TypeCheckFailure naming the field, not mid-task") {
+    import graft.functions.ArgAssign
+    val q = Seq((Seq(1L, 2L), 5L, 0)).toDF("qv", "nrm", "m")
+    val cid = lit(0L).as("cid")
+    val cv = array(lit(1L), lit(2L)).as("cv")
+    val cnrm = lit(5L).as("cnrm")
+    def cosFails(fields: org.apache.spark.sql.Column*): String =
+      intercept[org.apache.spark.sql.AnalysisException] {
+        q.select(ArgAssign.argmaxCosineCid(col("qv"), col("nrm"),
+          array(struct(fields: _*))))
+      }.getMessage
+    def l2Fails(fields: org.apache.spark.sql.Column*): String =
+      intercept[org.apache.spark.sql.AnalysisException] {
+        q.select(ArgAssign.argminL2Cid(col("qv"), col("nrm"), col("m"),
+          array(struct(fields: _*))))
+      }.getMessage
+    val badCv = cosFails(cid, array(lit(1), lit(2)).as("cv"), cnrm)
+    assert(badCv.contains("argmax_cos_cid: model field 'cv' must be " +
+      "array<bigint>, got array<int>"), badCv)
+    val badCid = cosFails(lit(0).as("cid"), cv, cnrm)
+    assert(badCid.contains("model field 'cid' must be bigint, got int"), badCid)
+    val noCnrm = cosFails(cid, cv)
+    assert(noCnrm.contains("model field 'cnrm' (bigint) is missing"), noCnrm)
+    val badM = l2Fails(lit("a").as("m"), cid, cv, cnrm)
+    assert(badM.contains("argmin_l2_cid: model field 'm' must be int or " +
+      "bigint, got string"), badM)
+    val badCnrm = l2Fails(lit(0).as("m"), cid, cv, lit(5.0).as("cnrm"))
+    assert(badCnrm.contains("model field 'cnrm' must be bigint, got double"),
+      badCnrm)
+    // a well-typed model (int `m` included) still analyzes
+    q.select(ArgAssign.argminL2Cid(col("qv"), col("nrm"), col("m"),
+      array(struct(lit(0).as("m"), cid, cv, cnrm))))
+  }
+
   test("TopKPairs ≡ the row_number window it replaces, on random grouped data") {
     import graft.functions.TopKPairs.topkPairs
     import org.apache.spark.sql.expressions.Window

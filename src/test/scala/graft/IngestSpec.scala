@@ -935,4 +935,54 @@ class IngestSpec extends AnyFunSuite {
     assert(rows(pushed) == rows(offDf),
       "pushdown changed values — the rewrite must be value-invisible")
   }
+
+  test("inParallel refuses an empty action list, naming the precondition") {
+    val e = intercept[IllegalArgumentException](Materialize.inParallel())
+    assert(e.getMessage.contains("at least one action"), e.getMessage)
+  }
+
+  test("inParallel: the first failure cancels the sibling's running job, " +
+      "waits for it to stop and rethrows the original cause unwrapped") {
+    import java.util.concurrent.TimeUnit
+    import org.apache.spark.scheduler._
+    val sc = spark.sparkContext
+    val marker = "graft-inparallel-cancel-probe"
+    val started = new java.util.concurrent.CountDownLatch(1)
+    val probeJobs = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val ended = new java.util.concurrent.LinkedBlockingQueue[JobResult]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(
+            _.getProperty("spark.job.description")
+              == marker)) {
+          probeJobs.add(e.jobId)
+          started.countDown()
+        }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (probeJobs.contains(e.jobId)) ended.put(e.jobResult)
+    }
+    sc.addSparkListener(listener)
+    try {
+      val t0 = System.nanoTime()
+      val e = intercept[IllegalStateException] {
+        Materialize.inParallel(
+          () => {
+            sc.setJobDescription(marker)
+            // ~100 s if never cancelled: 4 tasks x 100k elements x 1 ms
+            sc.parallelize(1 to 400000, 4).foreach(_ => Thread.sleep(1))
+          },
+          () => {
+            assert(started.await(60, TimeUnit.SECONDS),
+              "the sibling job never started")
+            throw new IllegalStateException("boom")
+          })
+      }
+      assert(e.getMessage == "boom")
+      val secs = (System.nanoTime() - t0) / 1e9
+      assert(secs < 30, s"the sibling job ran on for $secs s")
+      val result = ended.poll(30, TimeUnit.SECONDS)
+      assert(result != null && result != JobSucceeded,
+        s"the sibling job must end cancelled, got $result")
+    } finally sc.removeSparkListener(listener)
+  }
 }

@@ -468,8 +468,10 @@ class SnapshotSpec extends AnyFunSuite {
         .write.format("graft.sources.ManifestSink")
         .option("path", log).mode("append").save()
     }
+    val kName = org.apache.spark.sql.types.StructType.fromDDL(
+      "k BIGINT, name STRING")
     val ms = new graft.sources.ManifestMicroBatchStream(
-      log, Array("k", "name"), Array("long", "string"), Int.MaxValue)
+      log, kName, Int.MaxValue)
     def off(startId: Long, l: ReadLimit): Long =
       ms.latestOffset(graft.sources.EpochOffset(startId), l)
         .asInstanceOf[graft.sources.EpochOffset].id
@@ -488,8 +490,7 @@ class SnapshotSpec extends AnyFunSuite {
       "composite takes the tightest limit")
     assert(off(3, ReadLimit.maxFiles(1)) == 3, "caught up: no progress")
     // the maxEpochsPerTrigger table option still caps on top
-    val ms1 = new graft.sources.ManifestMicroBatchStream(
-      log, Array("k", "name"), Array("long", "string"), 1)
+    val ms1 = new graft.sources.ManifestMicroBatchStream(log, kName, 1)
     assert(ms1.latestOffset(graft.sources.EpochOffset(-1L),
       ReadLimit.maxFiles(3)).asInstanceOf[graft.sources.EpochOffset].id == 0)
 
@@ -4206,6 +4207,162 @@ class SnapshotSpec extends AnyFunSuite {
     assert(graft.sources.ManifestSink.compactionHorizon(log) >= 2L,
       s"resolution releases the sweep clamp: " +
         s"${graft.sources.ManifestSink.compactionHorizon(log)}")
+    graft.util.Fs.deleteRecursively(root)
+  }
+
+  test("READ-PATH PARITY: a merge-on-read table with a struct, an " +
+    "array<struct>, a map, an int->bigint widened column, an added " +
+    "column, live dvs and a live equality delete serves through " +
+    "ManifestReadFactory (with _pos/_row_id) exactly the rows the " +
+    "parquet delegate serves after compact_data") {
+    val root = Files.createTempDirectory("graft_read_parity")
+    val s = spark.newSession()
+    graft.sources.GraftCatalog.register(s, TestSpark.Sf0001)
+    s.conf.set("spark.sql.catalog.graft.snap.dir", root.toString)
+    val log = root.resolve("par").toString
+    s.sql("""CREATE TABLE graft.snap.par (k INT,
+            |  s STRUCT<a: BIGINT, b: STRING>,
+            |  arr ARRAY<STRUCT<x: BIGINT, y: STRING>>,
+            |  m MAP<STRING, BIGINT>)
+            |TBLPROPERTIES ('delete.mode'='mor')""".stripMargin)
+    // narrow era: these files store k as INT and lack `w`
+    s.sql("""INSERT INTO graft.snap.par SELECT CAST(id AS INT),
+            |  named_struct('a', id * 10,
+            |    'b', IF(id % 3 = 0, NULL, concat('b', id))),
+            |  IF(id % 4 = 0, NULL, array(named_struct('x', id, 'y', 'p'),
+            |    named_struct('x', -id, 'y', CAST(NULL AS STRING)))),
+            |  map('m', id, 'n', IF(id % 5 = 0, NULL, id + 1))
+            |FROM range(0, 20)""".stripMargin)
+    s.sql("ALTER TABLE graft.snap.par ALTER COLUMN k TYPE BIGINT")
+    s.sql("ALTER TABLE graft.snap.par ADD COLUMN w STRING")
+    s.sql("""INSERT INTO graft.snap.par SELECT id,
+            |  named_struct('a', id * 10, 'b', concat('b', id)),
+            |  array(named_struct('x', id, 'y', 'q')),
+            |  map('m', id), concat('w', id)
+            |FROM range(20, 30)""".stripMargin)
+    s.sql("DELETE FROM graft.snap.par WHERE k IN (3, 17, 25)") // live dvs
+    // a keyed upsert re-keys 5 (narrow-era file) and 22 (wide era): an
+    // #eqdel whose BIGINT keys must match the narrow files' INT keys
+    locally {
+      def utf8(v: String) = org.apache.spark.unsafe.types.UTF8String
+        .fromString(v)
+      val w = graft.sources.ManifestStreamingWrite(log,
+        s.table("graft.snap.par").schema, 100, "parwriter", "run0",
+        upsertKeys = Seq("k"))
+      val dw = w.createStreamingWriterFactory(null).createWriter(0, 0L, 0L)
+      Seq(5L, 22L).foreach { k =>
+        dw.write(org.apache.spark.sql.catalyst.InternalRow(k,
+          org.apache.spark.sql.catalyst.InternalRow(k * 100, utf8("up")),
+          new org.apache.spark.sql.catalyst.util.GenericArrayData(
+            Array[Any](org.apache.spark.sql.catalyst.InternalRow(k,
+              utf8("u")))),
+          org.apache.spark.sql.catalyst.util.ArrayBasedMapData(
+            Array[Any](utf8("u")), Array[Any](k)),
+          utf8("up")))
+      }
+      w.commit(0L, Array(dw.commit()))
+    }
+    assert(graft.sources.ManifestSink.equalityDeletes(log).nonEmpty &&
+      graft.sources.ManifestSink.deleteVectors(log).nonEmpty)
+    val cols = "k, s, arr, m, w"
+    def read(q: String): (String, Seq[org.apache.spark.sql.Row]) = {
+      val df = s.sql(q)
+      (df.queryExecution.executedPlan.toString,
+        df.collect().toSeq.sortBy(_.getLong(0)))
+    }
+    val (planLive, live) =
+      read(s"SELECT $cols, _pos, _row_id FROM graft.snap.par")
+    assert(planLive.contains("eq-delete-applying"), planLive)
+    assert(live.map(_.getLong(0)) ==
+      (0L until 30L).filterNot(Set(3L, 17L, 25L)), live.map(_.getLong(0)))
+    assert(live.find(_.getLong(0) == 5L).get.getString(4) == "up" &&
+      live.find(_.getLong(0) == 22L).get.getStruct(1).getLong(0) == 2200L,
+      "the upserted rows replace the deleted keys")
+    assert(live.forall(r => !r.isNullAt(5) && !r.isNullAt(6)) &&
+      live.map(_.getLong(6)).distinct.size == live.size,
+      "every row serves its ordinal and a distinct row id")
+
+    s.sql("CALL graft.sys.compact_data('par', 1000000)").collect()
+    assert(graft.sources.ManifestSink.equalityDeletes(log).isEmpty &&
+      graft.sources.ManifestSink.deleteVectors(log).isEmpty,
+      "compaction resolves every delete")
+    val (planPlain, plain) = read(s"SELECT $cols FROM graft.snap.par")
+    assert(!planPlain.contains("applying") &&
+      !planPlain.contains("metadata-column"), planPlain)
+    assert(plain ==
+      live.map(r => org.apache.spark.sql.Row(r.toSeq.take(5): _*)),
+      "the delegate serves exactly what the factory served")
+    // row identity rides the rewrite: ids served after it match
+    val (_, ids) = read(s"SELECT $cols, _row_id FROM graft.snap.par")
+    assert(ids == live.map(r =>
+      org.apache.spark.sql.Row(r.toSeq.take(5) :+ r.get(6): _*)))
+    graft.util.Fs.deleteRecursively(root)
+  }
+
+  test("META-NAMED DATA COLUMNS: a table whose data columns are named " +
+    "_change_type/_commit_version/_commit_timestamp (a change-feed " +
+    "archive) serves and keeps its stored values through every " +
+    "ManifestReadFactory read: live dvs, _file/_pos alongside, MoR " +
+    "UPDATE, COW UPDATE of a dv'd file, compaction, and the path-face " +
+    "stream tail") {
+    val root = Files.createTempDirectory("graft_meta_named")
+    val s = spark.newSession()
+    graft.sources.GraftCatalog.register(s, TestSpark.Sf0001)
+    s.conf.set("spark.sql.catalog.graft.snap.dir", root.toString)
+    s.sql("""CREATE TABLE graft.snap.arch (k BIGINT,
+            |  _change_type STRING, _commit_version BIGINT,
+            |  _commit_timestamp TIMESTAMP)
+            |TBLPROPERTIES ('delete.mode'='mor')""".stripMargin)
+    s.sql("""INSERT INTO graft.snap.arch SELECT id,
+            |  IF(id % 2 = 0, 'insert', 'update_postimage'), id * 10 + 7,
+            |  timestamp_seconds(1700000000 + id)
+            |FROM range(0, 10, 1, 1)""".stripMargin) // one file
+    // the stored values of the row first written with key `k0`
+    def stored(k0: Long): Seq[Any] = Seq(
+      if (k0 % 2 == 0) "insert" else "update_postimage", k0 * 10 + 7,
+      1700000000L + k0)
+    // the path-face tail serves the stored values too
+    val tail = s.readStream.format("graft.sources.ManifestSink")
+      .schema("k BIGINT, _change_type STRING, _commit_version BIGINT, " +
+        "_commit_timestamp TIMESTAMP")
+      .option("path", root.resolve("arch").toString).load()
+      .selectExpr("k", "_change_type", "_commit_version",
+        "unix_seconds(_commit_timestamp)")
+      .writeStream.format("memory").queryName("arch_tail")
+      .outputMode("append").start()
+    try tail.processAllAvailable() finally tail.stop()
+    assert(s.table("arch_tail").collect()
+      .map(r => r.getLong(0) -> r.toSeq.tail).toMap ==
+      (0L until 10L).map(k => k -> stored(k)).toMap, "stream tail")
+    s.sql("DELETE FROM graft.snap.arch WHERE k = 3") // live dv
+    val cols = "k, _change_type, _commit_version, " +
+      "unix_seconds(_commit_timestamp)"
+    def check(what: String, rekeyed: Map[Long, Long]): Unit = {
+      val df = s.sql(s"SELECT $cols FROM graft.snap.arch")
+      val got = df.collect().map(r => r.getLong(0) -> r.toSeq.tail).toMap
+      val want = (0L until 10L).filterNot(_ == 3L)
+        .map(k0 => rekeyed.getOrElse(k0, k0) -> stored(k0)).toMap
+      assert(got == want, s"$what\n" +
+        df.queryExecution.executedPlan.toString)
+    }
+    check("dv-applying read", Map.empty)
+    assert(s.sql(s"SELECT $cols FROM graft.snap.arch")
+      .queryExecution.executedPlan.toString.contains("dv-applying"))
+    val withMeta = s.sql("SELECT k, _commit_version, _file, _pos " +
+      "FROM graft.snap.arch").collect()
+    assert(withMeta.forall(r => r.getLong(1) == r.getLong(0) * 10 + 7 &&
+      r.getString(2).endsWith(".parquet") && !r.isNullAt(3)),
+      "metadata columns still serve beside the data columns: " +
+        withMeta.toSeq)
+    s.sql("UPDATE graft.snap.arch SET k = 105 WHERE k = 5") // position delta
+    check("after a MoR UPDATE", Map(5L -> 105L))
+    s.sql("ALTER TABLE graft.snap.arch SET TBLPROPERTIES " +
+      "('delete.mode'='cow')")
+    s.sql("UPDATE graft.snap.arch SET k = 1001 WHERE k = 1") // COW rewrite
+    check("after a COW UPDATE", Map(5L -> 105L, 1L -> 1001L))
+    s.sql("CALL graft.sys.compact_data('arch', 1000000)").collect()
+    check("after compact_data (parquet delegate)",
+      Map(5L -> 105L, 1L -> 1001L))
     graft.util.Fs.deleteRecursively(root)
   }
 
