@@ -256,7 +256,7 @@ object Materialize {
       .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
         col("o_orderpriority")),
       out, "o_orderpriority")
-    spark.read.parquet(out)
+    graft.sources.Tables.parquet(spark, out)
       .filter(col("o_orderpriority").isin("1-URGENT", "2-HIGH"))
       .groupBy("o_orderpriority")
       .agg(
@@ -287,7 +287,7 @@ object Materialize {
     writePartitioned(graft.sources.Tables.customer(spark, dir)
       .select(col("c_custkey"), col("c_acctbal"), col("c_nationkey")),
       out, "c_nationkey")
-    val fact = spark.read.parquet(out)
+    val fact = graft.sources.Tables.parquet(spark, out)
     val dim = graft.sources.Tables.nation(spark, dir)
       .filter(col("n_regionkey") === 1L)
     fact.join(dim, fact("c_nationkey") === dim("n_nationkey"))
@@ -417,7 +417,7 @@ object Materialize {
   /** The read-back half of [[variantStore]], split out so IngestSpec can
     * pin its plan under both rule settings on an existing directory. */
   private[graft] def variantStoreRead(spark: SparkSession, out: String): DataFrame =
-    spark.read.parquet(out)
+    graft.sources.Tables.parquet(spark, out)
       .select(col("event_type"),
         expr("variant_get(v, '$.k', 'bigint')").as("k"),
         expr("try_variant_get(v, '$.missing', 'bigint')").as("m"))
@@ -466,7 +466,7 @@ object Materialize {
       s"graft_mv_evagg_${java.lang.Integer.toHexString(dir.hashCode)}")
     partials(halved.filter(col("ts_us") <= col("split_us")))
       .write.mode("overwrite").parquet(mv)
-    mergeAggPartials(spark.read.parquet(mv),
+    mergeAggPartials(graft.sources.Tables.parquet(spark, mv),
       partials(halved.filter(col("ts_us") > col("split_us") || col("ts_us").isNull)))
   }
 
@@ -488,11 +488,11 @@ object Materialize {
       .select(col("event_id"), col("ts"), col("event_type"), col("value"))
       .repartition(64)
       .write.mode("overwrite").parquet(scatter)
-    spark.read.parquet(scatter)
+    graft.sources.Tables.parquet(spark, scatter)
       .repartitionByRange(8, col("ts"))
       .sortWithinPartitions(col("ts"))
       .write.mode("overwrite").parquet(compact)
-    spark.read.parquet(compact)
+    graft.sources.Tables.parquet(spark, compact)
       .groupBy("event_type")
       .agg(count(lit(1)).as("n"),
         sum(graft.functions.Exact.cents(col("value"))).as("value_cents"),
@@ -637,7 +637,7 @@ object Materialize {
       if (mxRow.isNullAt(0)) (0L, 0L)
       else (mxRow.getLong(0), mxRow.getLong(1))
     zorderWrite(base, "o_custkey", "cents", mk, mc, 8, out)
-    spark.read.parquet(out)
+    graft.sources.Tables.parquet(spark, out)
       .filter(col("o_custkey") <= lit(mk / 4) && col("cents") <= lit(mc / 4))
       .agg(count(lit(1)).as("n_orders"),
         sum(col("cents")).as("cents_sum"),
@@ -2913,7 +2913,8 @@ object Materialize {
     try q.processAllAvailable() finally q.stop()
     // `log` is read by the stream above; keep the val referenced
     require(log.nonEmpty)
-    spark.read.parquet(outDir).createOrReplaceTempView("graft_cdfs_feed")
+    graft.sources.Tables.parquet(spark, outDir)
+      .createOrReplaceTempView("graft_cdfs_feed")
     spark.sql(
       """SELECT _commit_version AS version, _change_type AS change_type,
         |  lang, count(*) AS n_rows, sum(n_chars) AS sum_chars

@@ -73,7 +73,7 @@ object GraphOps {
       // compress better; the sort is per-partition (no extra shuffle)
       .sortWithinPartitions("a", "b")
       .write.mode("overwrite").parquet(edgesOut)
-    spark.read.parquet(edgesOut)
+    Tables.parquet(spark, edgesOut)
   }
 
   def triangleCount(spark: SparkSession, dir: String): DataFrame = {
@@ -151,13 +151,13 @@ object GraphOps {
     sym.groupBy("src").agg(count(lit(1)).as("deg"))
       .sortWithinPartitions("src")
       .write.mode("overwrite").parquet(degOut)
-    val deg = spark.read.parquet(degOut)
+    val deg = Tables.parquet(spark, degOut)
     val adjOut = graft.ingest.Materialize.processScratchDir(
       s"graft_pagerank_adj_${java.lang.Integer.toHexString(dir.hashCode)}")
     sym.join(deg, "src")
       .sortWithinPartitions("src", "dst")
       .write.mode("overwrite").parquet(adjOut)
-    val adj = spark.read.parquet(adjOut)
+    val adj = Tables.parquet(spark, adjOut)
     var ranks = deg.select(col("src").as("v"), lit(PrScale).as("rank"))
     for (_ <- 1 to PrIters) {
       val contrib = adj

@@ -508,7 +508,7 @@ object TextOps {
       .select(explode(toks).as("word"))
       .groupBy("word").agg(count(lit(1)).as("cnt"))
       .write.mode("overwrite").parquet(cntOut)
-    val counts = spark.read.parquet(cntOut)
+    val counts = Tables.parquet(spark, cntOut)
     val total = counts.agg(sum(col("cnt")).as("total_tokens"))
     val w = Window.orderBy(col("cnt").desc, col("word").asc)
     counts.orderBy(col("cnt").desc, col("word").asc).limit(VocabTopK)

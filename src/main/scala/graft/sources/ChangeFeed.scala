@@ -56,6 +56,22 @@ object ChangeFeed {
   val CommitVersionCol = "_commit_version"
   val CommitTsCol = "_commit_timestamp"
 
+  /** A feed adds the change columns beside the table's data columns,
+    * so a table storing a data column under a change column's name (a
+    * change-feed archive), by its physical or its logical name, would
+    * serve two columns of that name: refuse it, naming the columns. */
+  private def requireNoChangeColumnClash(dir: String,
+      names: Seq[String]): Unit = {
+    val clash = names.filter(n =>
+      Seq(ChangeTypeCol, CommitVersionCol, CommitTsCol)
+        .exists(_.equalsIgnoreCase(n))).distinct
+    if (clash.nonEmpty)
+      throw new UnsupportedOperationException(
+        s"manifest table $dir stores data column(s) " +
+          s"${clash.mkString(", ")} under the change feed's own column " +
+          "names: it has no change feed")
+  }
+
   /** The change rows of `(since, until]` on the manifest table at
     * `dir`. `since = -1` starts before the first epoch (refused if the
     * log was ever swept past it); `until` defaults to the newest
@@ -79,6 +95,8 @@ object ChangeFeed {
     val physCols = served.map(_.name).toSeq
     def logicalName(p: String): String =
       colmap.getOrElse(p.toLowerCase, p)
+    requireNoChangeColumnClash(dir,
+      physCols ++ physCols.map(logicalName))
 
     def dataPath(n: String): String =
       Paths.get(dir, "data", n).toString
@@ -335,7 +353,7 @@ object ChangeFeed {
           "column sets — the keyed sink writes exactly one per epoch")
       val keyCols = colsets.head
       val preFiles = ManifestSink.committedFilesAsOf(dir, d.id - 1)
-      val keys = spark.read.parquet(d.eqdels.map(e => dataPath(e._1)): _*)
+      val keys = Tables.parquet(spark, d.eqdels.map(e => dataPath(e._1)): _*)
         .select(keyCols.map(col): _*)
       val deletedRows =
         if (preFiles.isEmpty)
@@ -434,6 +452,8 @@ object ChangeFeed {
     // main table face — the unpruned read then physicalizes per level,
     // so nested-dropped data never resurfaces on the change feed
     val logical = ManifestSink.logicalizeStruct(phys, colmap)
+    requireNoChangeColumnClash(dir,
+      served.fieldNames.toSeq ++ logical.fieldNames)
     (served, // physical (top-level drops applied; inner names physical)
       logical.add(ChangeTypeCol, "string", nullable = false)
         .add(CommitVersionCol, "long", nullable = false)

@@ -123,7 +123,7 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
       // (IngestSpec pins catalog-read ≡ Tables.events values).
       val path = sfPath(EventsTable).toString
       val spark = SparkSession.active
-      val inferred = spark.read.parquet(path).schema
+      val inferred = Tables.parquet(spark, path).schema
       inferred("ts").dataType match {
         case org.apache.spark.sql.types.TimestampNTZType |
              org.apache.spark.sql.types.TimestampType =>
@@ -145,8 +145,7 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
     case Seq(SfNs) if SfTables.contains(ident.name()) && sfPath(ident.name()).exists() =>
       // fresh provider per load: FileDataSourceV2 memoizes its Table, and
       // a re-pointed dir must not serve the previous scale's files
-      new ParquetDataSourceV2().getTable(new CaseInsensitiveStringMap(
-        Map("path" -> sfPath(ident.name()).toString).asJava))
+      GraftCatalog.parquetTable(sfPath(ident.name()).toString)
     case Seq(MutNs) =>
       // the writable (delete-capable) namespace: hive-partitioned
       // parquet under <mut.dir>/<table>, partition column from
@@ -1028,6 +1027,18 @@ object GraftCatalog {
         !name.contains("..") && !name.startsWith("."),
       s"illegal snap table name '$name' — table names must be a single " +
         "path segment (no '/', '\\', '..' or leading '.')")
+
+  /** The builtin parquet DSv2 table over `path`, declaring the footer
+    * schema [[Tables.parquet]] declares (a schema-less `getTable` infers
+    * it in a Spark job on every load); with no footer schema Spark's
+    * provider infers, or fails, itself. */
+  private[sources] def parquetTable(path: String): Table = {
+    val opts = new CaseInsensitiveStringMap(Map("path" -> path).asJava)
+    org.apache.spark.sql.graftbridge.Bridge
+      .parquetFooterSchema(SparkSession.active, Seq(path))
+      .fold(new ParquetDataSourceV2().getTable(opts))(
+        new ParquetDataSourceV2().getTable(opts, _))
+  }
 
   val SfNs = "sf"
   val GenNs = "gen"

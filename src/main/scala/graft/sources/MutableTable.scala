@@ -8,7 +8,6 @@ import org.apache.spark.sql.connector.catalog.{SupportsDeleteV2, SupportsRead, T
 import org.apache.spark.sql.connector.expressions.{Literal, NamedReference, Transform}
 import org.apache.spark.sql.connector.expressions.filter.Predicate
 import org.apache.spark.sql.connector.read.ScanBuilder
-import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetDataSourceV2
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
@@ -37,8 +36,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 case class MutableTable(root: String, partCol: String) extends Table
     with SupportsRead with SupportsDeleteV2 {
 
-  private def inner: Table = new ParquetDataSourceV2().getTable(
-    new CaseInsensitiveStringMap(Map("path" -> root).asJava))
+  private def inner: Table = GraftCatalog.parquetTable(root)
 
   override def name(): String = s"mutable($root)"
   override def schema(): StructType = inner.schema()

@@ -5,10 +5,13 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Parquet table catalog over the driver-generated star schema
-  * (see /root/repo/TESTDATA.md). The reference engine's equivalent is the
-  * BigQuery-connector scan (`/root/reference/prefect/spark/fifa_spark.py:24-31`);
-  * here every table is a plain columnar parquet scan so Catalyst gets
-  * filter pushdown + column pruning for free.
+  * (see TESTDATA.md). The reference engine's equivalent is the
+  * BigQuery-connector scan (reference `prefect/spark/fifa_spark.py:24-31`),
+  * whose table metadata supplies the schema; here every table is a plain
+  * columnar parquet scan so Catalyst gets filter pushdown + column
+  * pruning for free, and every table read DECLARES the schema [[parquet]]
+  * takes from one footer on the driver — no read launches a Spark job
+  * to infer it.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -18,7 +21,23 @@ object Tables {
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
     name match {
       case "events" => events(spark, dir)
-      case _        => spark.read.parquet(s"$dir/$name.parquet")
+      case _        => parquet(spark, s"$dir/$name.parquet")
+    }
+
+  /** `spark.read.parquet(paths*)` with the schema Spark would infer,
+    * read from one footer on the driver
+    * ([[org.apache.spark.sql.graftbridge.Bridge.parquetFooterSchema]])
+    * and declared, so building the frame launches no job — Spark's own
+    * inference reads that same footer in a one-task job per read. The
+    * one schema-less parquet read in the program: schema, input files
+    * and rows equal Spark's (TablesReadSpec). When the session merges
+    * schemas, no data file is listed or the session is a Connect client
+    * this IS `spark.read.parquet`, so the caller sees Spark's own schema
+    * or error. */
+  def parquet(spark: SparkSession, paths: String*): DataFrame =
+    org.apache.spark.sql.graftbridge.Bridge.parquetFooterSchema(spark, paths) match {
+      case Some(schema) => spark.read.schema(schema).parquet(paths: _*)
+      case None         => spark.read.parquet(paths: _*)
     }
 
   /** `events.ts` is parquet TIMESTAMP(NANOS), which Spark's vectorized
@@ -37,7 +56,7 @@ object Tables {
       "events.parquet stores TIMESTAMP(NANOS): set " +
         "spark.sql.legacy.parquet.nanosAsLong=true on the SparkSession " +
         "builder (see graft.Verify for the canonical config)")
-    val raw = spark.read.parquet(s"$dir/events.parquet")
+    val raw = parquet(spark, s"$dir/events.parquet")
     raw.schema("ts").dataType match {
       case LongType =>
         raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))

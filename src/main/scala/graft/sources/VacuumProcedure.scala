@@ -205,7 +205,7 @@ class CompactProcedure(snapDir: () => String,
               eqs: Seq[ManifestSink.EqDelete])
               : org.apache.spark.sql.DataFrame =
             eqs.groupBy(_.cols).foldLeft(d0) { case (d, (cols, group)) =>
-              val keys = spark.read.parquet(group.map(e =>
+              val keys = Tables.parquet(spark, group.map(e =>
                 new java.io.File(new java.io.File(dir, "data"),
                   e.file).toString): _*)
                 .select(cols.map(org.apache.spark.sql.functions.col): _*)

@@ -515,7 +515,7 @@ object StreamOps {
     // zero triggers (an empty/fully-incomplete corpus lands no files)
     // never create the sink dir — an empty result, not a read error
     if (Files.exists(Path.of(out)))
-      spark.read.parquet(out)
+      graft.sources.Tables.parquet(spark, out)
     else
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         streamed.schema)
@@ -907,7 +907,7 @@ object StreamOps {
     val root = scratchTmp("graft_stream_tws_init")
     val feed = new FileFeed(Files.createDirectories(root.resolve("src")))
     val ckpt = root.resolve("ckpt").toString
-    val init = spark.read.parquet(half1.toString).as[Ev]
+    val init = graft.sources.Tables.parquet(spark, half1.toString).as[Ev]
       .groupByKey(_.user_id)
       .mapGroups { (uid, rows) =>
         rows.foldLeft(UserAgg(uid, 0L, 0L)) { (acc, e) =>
@@ -1020,7 +1020,7 @@ object StreamOps {
         else {
           val touched = withBucket.select("bucket").distinct()
             .collect().map(_.getInt(0)) // bounded metadata, ≤ nBuckets
-          val prev = spark.read.parquet(table)
+          val prev = graft.sources.Tables.parquet(spark, table)
             .filter(col("bucket").isin(touched.map(Integer.valueOf): _*))
           prev
             .join(broadcast(withBucket.select(col(keyCol).as("__mk"))),
@@ -1138,7 +1138,7 @@ object StreamOps {
     finally { query.stop(); feed.close() }
     // the table dir outlives the query — it IS the result
     if (Files.exists(Path.of(table)))
-      spark.read.parquet(table).drop("bucket")
+      graft.sources.Tables.parquet(spark, table).drop("bucket")
     else spark.emptyDataset[UserAgg].toDF() // empty corpus: no batches
   }
 
@@ -1574,7 +1574,7 @@ object StreamOps {
       q.stop()
       graft.util.Fs.deleteRecursively(root.resolve("ckpt"))
     }
-    spark.read.parquet(outDir)
+    graft.sources.Tables.parquet(spark, outDir)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"),
         countDistinct(col("user_id")).as("n_users"),

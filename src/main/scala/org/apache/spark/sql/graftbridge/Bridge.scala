@@ -62,6 +62,51 @@ object Bridge {
         s.sessionState.newHadoopConf())
   }
 
+  /** The data schema Spark's non-merging parquet inference
+    * (`ParquetUtils.inferSchema`) gives `paths`, read from ONE footer on
+    * the driver instead of in a one-task job. The file is Spark's pick:
+    * the index's files sorted by path, then `_common_metadata`, else
+    * `_metadata`, else the first data file; the converter takes the
+    * session flags `mergeSchemasInParallel` passes. None when the
+    * session merges schemas, no data file is listed, or the session is
+    * a Connect client (its server lists the files) — the caller then
+    * leaves inference (and its error) to Spark. The session state and
+    * its Hadoop conf are `private[sql]`. */
+  def parquetFooterSchema(spark: org.apache.spark.sql.SparkSession,
+      paths: Seq[String]): Option[org.apache.spark.sql.types.StructType] = {
+    import org.apache.parquet.hadoop.ParquetFileWriter.{PARQUET_COMMON_METADATA_FILE,
+      PARQUET_METADATA_FILE}
+    import org.apache.spark.sql.execution.datasources.parquet._
+    spark match {
+      case s: org.apache.spark.sql.classic.SparkSession
+          if !s.sessionState.conf.isParquetSchemaMergingEnabled =>
+        val conf = s.sessionState.conf
+        val files = new org.apache.spark.sql.execution.datasources.InMemoryFileIndex(
+            s, paths.map(new org.apache.hadoop.fs.Path(_)), Map.empty, None)
+          .allFiles().sortBy(_.getPath.toString)
+        def named(n: String) = files.find(_.getPath.getName == n)
+        files.find(f => f.getPath.getName != PARQUET_COMMON_METADATA_FILE &&
+            f.getPath.getName != PARQUET_METADATA_FILE).map { firstData =>
+          val pick = named(PARQUET_COMMON_METADATA_FILE)
+            .orElse(named(PARQUET_METADATA_FILE)).getOrElse(firstData)
+          val footer = ParquetFooterReader.readFooter(
+            org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(
+              pick, s.sessionState.newHadoopConf()),
+            org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS)
+          ParquetFileFormat.readSchemaFromFooter(
+            new org.apache.parquet.hadoop.Footer(pick.getPath, footer),
+            new ParquetToSparkSchemaConverter(
+              assumeBinaryIsString = conf.isParquetBinaryAsString,
+              assumeInt96IsTimestamp = conf.isParquetINT96AsTimestamp,
+              inferTimestampNTZ = conf.parquetInferTimestampNTZEnabled,
+              nanosAsLong = conf.legacyParquetNanosAsLong,
+              respectUnknownTypeAnnotation =
+                conf.parquetReaderRespectUnknownTypeAnnotation))
+        }
+      case _ => None
+    }
+  }
+
   /** Catalyst predicate → public v1 `Filter` (the translation
     * `DataSourceStrategy` applies for v1 pushdown), for connectors that
     * evaluate predicates against their own metadata (graft's `#stats`

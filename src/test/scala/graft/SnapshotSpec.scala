@@ -4366,6 +4366,39 @@ class SnapshotSpec extends AnyFunSuite {
     graft.util.Fs.deleteRecursively(root)
   }
 
+  test("META-NAMED DATA COLUMNS have no change feed: .changes and " +
+    "tableChanges refuse the archive table, naming the clashing " +
+    "columns, instead of serving duplicate names") {
+    val root = Files.createTempDirectory("graft_meta_named_cdf")
+    val s = spark.newSession()
+    graft.sources.GraftCatalog.register(s, TestSpark.Sf0001)
+    s.conf.set("spark.sql.catalog.graft.snap.dir", root.toString)
+    s.sql("""CREATE TABLE graft.snap.arch (k BIGINT,
+            |  _change_type STRING, _commit_version BIGINT,
+            |  _commit_timestamp TIMESTAMP)""".stripMargin)
+    s.sql("""INSERT INTO graft.snap.arch SELECT id, 'insert', id,
+            |  timestamp_seconds(1700000000 + id)
+            |FROM range(0, 4, 1, 1)""".stripMargin)
+    def refusal(body: => Any): String =
+      intercept[UnsupportedOperationException](body).getMessage
+    val names = "_change_type, _commit_version, _commit_timestamp"
+    for (m <- Seq(
+        refusal(s.table("graft.snap.arch.changes").collect()),
+        refusal(graft.sources.ChangeFeed.tableChanges(s,
+          root.resolve("arch").toString, -1L))))
+      assert(m.contains(names), m)
+    // a RENAME onto a change column's name clashes by its logical name
+    s.sql("CREATE TABLE graft.snap.ren (k BIGINT, v BIGINT)")
+    s.sql("INSERT INTO graft.snap.ren VALUES (1, 2)")
+    assert(s.table("graft.snap.ren.changes").count() == 1)
+    s.sql("ALTER TABLE graft.snap.ren RENAME COLUMN v TO _commit_version")
+    val m = refusal(s.table("graft.snap.ren.changes").collect())
+    assert(m.contains("data column(s) _commit_version under"), m)
+    assert(s.table("graft.snap.ren").collect().toSeq ==
+      Seq(org.apache.spark.sql.Row(1L, 2L)), "the table itself still reads")
+    graft.util.Fs.deleteRecursively(root)
+  }
+
   test("ROW TRACKING (round 19): _row_id is stable across COW UPDATE " +
     "and compaction (materialized _graft_rowid), the CDC feed serves " +
     "COW MERGE and rollback as per-row PAIRED labels (#cdcpair), and " +
